@@ -121,9 +121,7 @@ def _update_main_idx(
                 prior.append(u)
             bid = m.get("batch_id")
             if bid is not None:
-                br = m.get("branch")
-                key = f"branch:{br}:{bid}" if br else str(bid)
-                batch_ids[key] = u
+                batch_ids[_batch_key(m.get("branch"), bid)] = u
         idx = {"last": max(prior, default=0), "main": prior}
         if batch_ids:
             idx["batch_ids"] = batch_ids
@@ -150,19 +148,26 @@ def _update_main_idx(
     os.replace(tmp, os.path.join(mdir, _MAIN_IDX))
 
 
-def _find_batch_commit(table_dir: str, batch_id: int) -> int | None:
-    """The MAIN-LINE version that already committed streaming batch
-    ``batch_id``, or None — idx lookup plus a tail scan of manifests
-    newer than the idx's coverage (same healing contract as
-    main_versions). Batch ids are namespaced by lane: branch commits
-    keep their own counters (both start at 0), so a main sink sharing
-    a table with a foreach_batch_branch sink must never treat the
-    branch's ids as its own replays — branch manifests are skipped
-    here and their idx keys carry a `branch:` prefix."""
+def _batch_key(branch: str | None, batch_id) -> str:
+    """The idx key of a streaming replay token, namespaced by lane."""
+    return f"branch:{branch}:{batch_id}" if branch else str(batch_id)
+
+
+def _find_batch_commit(
+    table_dir: str, batch_id: int, branch: str | None = None
+) -> int | None:
+    """The version that already committed streaming batch ``batch_id``
+    on the MAIN line (``branch=None``) or on ``branch``, or None — idx
+    lookup plus a tail scan of manifests newer than the idx's coverage
+    (same healing contract as main_versions). Batch ids are namespaced
+    by lane: branch commits keep their own counters (both start at 0),
+    so a main sink sharing a table with a foreach_batch_branch sink
+    must never treat the branch's ids as its own replays — the scan
+    matches the lane and idx keys carry a `branch:` prefix."""
     idx = _load_main_idx(table_dir)
     vs = versions(table_dir)
     if idx is not None:
-        hit = idx.get("batch_ids", {}).get(str(batch_id))
+        hit = idx.get("batch_ids", {}).get(_batch_key(branch, batch_id))
         if hit is not None:
             return int(hit)
         tail = [v for v in vs if v > idx["last"]]
@@ -170,7 +175,7 @@ def _find_batch_commit(table_dir: str, batch_id: int) -> int | None:
         tail = vs
     for pv in tail:
         m = _load_manifest(table_dir, pv)
-        if "branch" not in m and m.get("batch_id") == batch_id:
+        if m.get("branch") == branch and m.get("batch_id") == batch_id:
             return pv
     return None
 
@@ -327,7 +332,13 @@ def _pinned_parquet_read(
     job per read (round-12, measured via scripts/job_ledger.py), paid
     by every staged-file re-read of every commit. Falls back to the
     inference read for footer schemas the arrow->spark conversion
-    cannot express."""
+    cannot express.
+
+    Precondition: every path comes from ONE commit's staging (its
+    staged files, or the staging dir itself) and so shares one schema
+    — the first footer is then every file's schema. Not a general
+    multi-version reader: files of an evolved schema would be read
+    through the first file's columns."""
     try:
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
@@ -351,20 +362,25 @@ def _file_stats(path: str, cols: list[str]) -> dict:
     out: dict[str, list] = {}
     idx = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
     for col in cols:
-        if col not in idx:
-            continue
-        lo = hi = None
-        ok = True
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(idx[col]).statistics
-            if st is None or not st.has_min_max:
-                ok = False
-                break
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        if ok and isinstance(lo, (int, float, str)) and not isinstance(lo, bool):
-            out[col] = [lo, hi]
+        if col in idx and (mm := _footer_minmax(meta, idx[col])) is not None:
+            out[col] = list(mm)
     return out
+
+
+def _footer_minmax(meta, i: int) -> tuple | None:
+    """(min, max) of column ``i`` over every row group of a parquet
+    footer, or None when a row group lacks stats or the values are not
+    JSON-safe (numeric/string)."""
+    lo = hi = None
+    for rg in range(meta.num_row_groups):
+        st = meta.row_group(rg).column(i).statistics
+        if st is None or not st.has_min_max:
+            return None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    if isinstance(lo, (int, float, str)) and not isinstance(lo, bool):
+        return lo, hi
+    return None
 
 
 # Auto-coalesce threshold for freshly staged commits: a commit whose
@@ -401,20 +417,9 @@ def _looks_clustered(paths: list[str]) -> bool:
             continue
         cols: dict = {}
         for i in range(meta.num_columns):
-            name = meta.schema.column(i).name
-            lo = hi = None
-            ok = True
-            for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(i).statistics
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if ok and isinstance(lo, (int, float, str)) and not isinstance(
-                lo, bool
-            ):
-                cols[name] = (lo, hi)
+            mm = _footer_minmax(meta, i)
+            if mm is not None:
+                cols[meta.schema.column(i).name] = mm
         per_file.append(cols)
     if len(per_file) < 2:
         return False
@@ -634,6 +639,44 @@ def _enforce_unique(
         )
 
 
+def _check_append_schema(head: dict, schema) -> None:
+    """Schema is VERSIONED with the log (the Delta model): an append
+    may EVOLVE it additively (new nullable columns; carried old files
+    read as NULL for them) but never drop or retype a column the head
+    has. Nor may a new column take the PHYSICAL name of a renamed-away
+    or dropped column: carried files' dead bytes would resurface as
+    its values on read. No-op for heads without a versioned schema."""
+    head_schema = _manifest_schema(head)
+    if head_schema is None:
+        return
+    head_names = {f.name for f in head_schema.fields}
+    # physical names still present in data files but not addressable:
+    # mapped-away originals + dropped columns
+    unavailable = (
+        set(_mapping(head).values()) | set(head.get("retired_columns", []))
+    ) - head_names
+    new_fields = {f.name: f.dataType for f in schema.fields}
+    for name in new_fields:
+        if name not in head_names and name in unavailable:
+            raise ValueError(
+                f"column name {name!r} is the PHYSICAL name of a "
+                "renamed or dropped column and cannot be reused "
+                "(files still carry it); pick another name"
+            )
+    for f in head_schema.fields:
+        if f.name not in new_fields:
+            raise ValueError(
+                f"append drops column {f.name!r}; schema evolution "
+                "is additive-only (use mode='overwrite' to re-shape)"
+            )
+        if new_fields[f.name] != f.dataType:
+            raise ValueError(
+                f"append retypes column {f.name!r} "
+                f"({f.dataType.simpleString()} -> "
+                f"{new_fields[f.name].simpleString()})"
+            )
+
+
 def write_version(
     df: DataFrame,
     table_dir: str,
@@ -700,7 +743,8 @@ def write_version(
     lower live claim to commit or vanish before checking its base), so
     two concurrent appenders both land and the later one carries the
     earlier one's files — no lost updates (the Delta optimistic-commit
-    loop). A crash between claim and commit strands the claim: that
+    loop, run by `_transact`). Every non-publishing exit releases the
+    claim; only a crash between claim and commit strands it: that
     version number is skipped, the staged tx dir is TTL-swept by
     vacuum, and successors stop waiting once the claim goes stale.
     """
@@ -718,6 +762,11 @@ def write_version(
         pv = _find_batch_commit(table_dir, batch_id)
         if pv is not None:
             return pv  # replayed micro-batch: already committed
+    # the main head at entry feeds partition-spec inheritance, the
+    # column mapping and the auto-coalesce rule below; the commit loop
+    # re-checks every attempt against the head it commits on
+    head_v = _main_head(table_dir)
+    head_m = _load_manifest(table_dir, head_v) if head_v is not None else {}
     if partition_by is None:
         # The partition spec is TABLE metadata (the Iceberg model):
         # once declared it is INHERITED by every later commit until a
@@ -726,11 +775,9 @@ def write_version(
         # pruning doesn't care — or [] to clear it). Inherit only when
         # the spec columns survive in this df (an overwrite may
         # legitimately re-shape them away).
-        head = main_versions(table_dir)
-        if head:
-            inherited = _load_manifest(table_dir, head[-1]).get("partition_by")
-            if inherited and set(inherited) <= set(df.columns):
-                partition_by = list(inherited)
+        inherited = head_m.get("partition_by")
+        if inherited and set(inherited) <= set(df.columns):
+            partition_by = list(inherited)
     if partition_by:
         missing = sorted(set(partition_by) - set(df.columns))
         if missing:
@@ -757,28 +804,13 @@ def write_version(
     # column mapping is table metadata: appends write files under the
     # table's PHYSICAL names (overwrite re-shapes and resets to
     # identity). Captured before staging; the commit loop re-checks it.
-    cmap: dict = {}
-    if mode == "append":
-        head0 = main_versions(table_dir)
-        if head0:
-            hm = _load_manifest(table_dir, head0[-1])
-            cmap = _mapping(hm)
-            hs = _manifest_schema(hm)
-            if hs is not None:
-                # pre-staging twin of the in-loop guard: a new logical
-                # column may not take a renamed/dropped PHYSICAL name
-                # (staging would collide two columns on the same name)
-                head_names = {f.name for f in hs.fields}
-                unavailable = (
-                    set(cmap.values()) | set(hm.get("retired_columns", []))
-                ) - head_names
-                for name in df.columns:
-                    if name not in head_names and name in unavailable:
-                        raise ValueError(
-                            f"column name {name!r} is the PHYSICAL name of "
-                            "a renamed or dropped column and cannot be "
-                            "reused (files still carry it); pick another name"
-                        )
+    if mode == "overwrite":
+        head_m = {}
+    cmap = _mapping(head_m)
+    # pre-staging twin of the per-attempt check: a new logical column
+    # may not take a renamed/dropped PHYSICAL name (staging would
+    # collide two columns on the same name)
+    _check_append_schema(head_m, df.schema)
     # stage the data ONCE — the commit loop below may rebase, but the
     # bytes never rewrite (manifests don't care what the dir is named)
     token = _uuid.uuid4().hex[:12]
@@ -796,24 +828,14 @@ def write_version(
         # is load-bearing for file skipping, so it is preserved; a
         # table with no pruning metadata can never be file-pruned and
         # a small commit's many task-shard files are pure overhead.
-        _head_meta = (
-            _load_manifest(table_dir, main_versions(table_dir)[-1])
-            if main_versions(table_dir) and mode == "append"
-            else {}
-        )
-        _layout_bound = bool(
-            partition_by
-            or stats_cols
-            or bloom_cols
-            or _head_meta.get("partition_by")
-            or _head_meta.get("stats")
-            or _head_meta.get("bloom_cols")
-        )
+        layout_bound = bool(
+            partition_by or stats_cols or bloom_cols
+        ) or _layout_bound(head_m)
         new_files, new_meta = _stage_files(
             table_dir,
             rel_dir,
             coalesce_small=(
-                (not _layout_bound)
+                (not layout_bound)
                 if coalesce_small is None
                 else coalesce_small
             ),
@@ -848,17 +870,10 @@ def write_version(
                 new_stats[rel] = _file_stats(
                     os.path.join(table_dir, rel), phys_stat_cols
                 )
-        for _attempt in range(20):
-            prior = main_versions(table_dir)
-            prev = (
-                _load_manifest(table_dir, prior[-1])
-                if prior and mode == "append"
-                else {}
-            )
-            # Schema is VERSIONED with the log (the Delta model): appends
-            # may EVOLVE it additively (new nullable columns; carried old
-            # files read as NULL for them) but never drop or retype a
-            # column the table has — re-checked after every rebase.
+
+        def plan(head: dict):
+            nonlocal uk_checked_head, built_bloom_for, idx_rel
+            prev = head if mode == "append" else {}
             if prev and _mapping(prev) != cmap:
                 # a rename/drop committed between staging and this
                 # rebase: the staged bytes carry stale physical names
@@ -866,39 +881,13 @@ def write_version(
                     "concurrent column-mapping change during append; "
                     "retry the write"
                 )
-            prev_schema = _manifest_schema(prev) if prev else None
-            if prev_schema is not None:
-                prev_names = {f.name for f in prev_schema.fields}
-                # physical names still present in data files but not
-                # addressable: mapped-away originals + dropped columns
-                unavailable = (set(_mapping(prev).values()) | set(
-                    prev.get("retired_columns", [])
-                )) - prev_names
-                new_fields = {f.name: f.dataType for f in df.schema.fields}
-                for name in new_fields:
-                    if name not in prev_names and name in unavailable:
-                        raise ValueError(
-                            f"column name {name!r} is the PHYSICAL name of a "
-                            "renamed or dropped column and cannot be reused "
-                            "(files still carry it); pick another name"
-                        )
-                for f in prev_schema.fields:
-                    if f.name not in new_fields:
-                        raise ValueError(
-                            f"append drops column {f.name!r}; schema evolution "
-                            "is additive-only (use mode='overwrite' to re-shape)"
-                        )
-                    if new_fields[f.name] != f.dataType:
-                        raise ValueError(
-                            f"append retypes column {f.name!r} "
-                            f"({f.dataType.simpleString()} -> "
-                            f"{new_fields[f.name].simpleString()})"
-                        )
+            # re-checked after every rebase
+            _check_append_schema(prev, df.schema)
             effective_exp = {**prev.get("expectations", {}), **(expectations or {})}
             todo = set(effective_exp) - enforced
             if todo:  # heavy scans stay OUTSIDE the claim window
                 _enforce_expectations(gate_df, effective_exp)
-                enforced |= set(effective_exp)
+                enforced.update(effective_exp)
             # unique-key (PK) gate — inherited like expectations; the
             # vs-table probe is re-run if a rebase moved the head (a
             # racer may have inserted the same key)
@@ -911,7 +900,7 @@ def write_version(
                 missing_uk = sorted(set(effective_uk) - set(df.columns))
                 if missing_uk:
                     raise ValueError(f"unique_keys columns not in data: {missing_uk}")
-                head_now = prior[-1] if prior else None
+                head_now = head.get("version")
                 if uk_checked_head != ("head", head_now):
                     _enforce_unique(
                         gate_df,
@@ -940,23 +929,16 @@ def write_version(
                     f"tx-{token}",
                 )
                 built_bloom_for = tuple(eff_bloom_cols)
-            v = _claim_version(table_dir, versions(table_dir))
-            _await_predecessors(table_dir, v)
-            if main_versions(table_dir) != prior:
-                _release_claim(table_dir, v)  # rebase onto the new head
-                continue
-            if prev:
-                carried = prev["files"]
-                stats = {**prev.get("stats", {}), **new_stats}
-                file_meta = {**prev.get("file_meta", {}), **new_meta}
-            else:
-                carried, stats, file_meta = [], dict(new_stats), dict(new_meta)
+            return effective_exp, effective_uk, eff_bloom_cols
+
+        def build(v: int, head: dict, planned) -> dict:
+            effective_exp, effective_uk, eff_bloom_cols = planned
+            prev = head if mode == "append" else {}
             manifest = {
-                "version": v,
                 "mode": mode,
-                "files": carried + new_files,
-                "stats": stats,
-                "file_meta": file_meta,
+                "files": list(prev.get("files", [])) + new_files,
+                "stats": {**prev.get("stats", {}), **new_stats},
+                "file_meta": {**prev.get("file_meta", {}), **new_meta},
                 "schema": json.loads(df.schema.json()),
                 "expectations": effective_exp,
                 # always explicit here ([] = no/cleared spec) — a
@@ -969,29 +951,23 @@ def write_version(
                 # and the retired-name ledger (it re-shapes the table,
                 # new files ARE the physical truth); appends carry both
                 "column_mapping": cmap,
-                "retired_columns": (
-                    list(prev.get("retired_columns", [])) if prev else []
-                ),
+                "retired_columns": list(prev.get("retired_columns", [])),
             }
             if eff_bloom_cols:
                 manifest["bloom_cols"] = eff_bloom_cols
-                indexes = list(prev.get("bloom_indexes", [])) if prev else []
+                indexes = list(prev.get("bloom_indexes", []))
                 if idx_rel:
                     indexes.append(idx_rel)
                 if indexes:
                     manifest["bloom_indexes"] = indexes
-            if prev.get("dv"):
-                # appends carry the deletion vector BY NAME: old files
-                # keep their deletes, new files have none
-                manifest["dv"] = prev["dv"]
-                manifest["dv_rows"] = prev.get("dv_rows", 0)
+            # appends carry the deletion vector BY NAME: old files keep
+            # their deletes, new files have none
+            manifest.update(_carry_sidecars(prev, ("dv", "dv_rows")))
             if batch_id is not None:
                 manifest["batch_id"] = batch_id
-            _commit_manifest(table_dir, v, manifest)
-            return v
-        raise RuntimeError(
-            f"write_version: lost the commit race 20 times on {table_dir}"
-        )
+            return manifest
+
+        return _transact(table_dir, "write_version", plan, build, attempts=20)
     except (ValueError, RuntimeError):
         # refused commit (schema/expectations/race): remove the staged
         # bytes rather than leaving them for the TTL sweep
@@ -1003,12 +979,23 @@ def write_version(
         raise
 
 
+_CLAIM_RE = re.compile(r"^\.claim-v(\d+)$")
+
+
 def _claim_version(table_dir: str, prior: list[int]) -> int:
     """O_EXCL-claim the next free version number (see write_version's
-    concurrency contract)."""
+    concurrency contract), above every committed version in ``prior``
+    AND every live claim. A number released below a live claim is
+    skipped: its new holder would not wait for that claimant
+    (committers wait only for LOWER claims), so both could publish off
+    the same base. Skipped numbers stay holes, like a crashed
+    writer's."""
     mdir = _manifest_dir(table_dir)
     os.makedirs(mdir, exist_ok=True)
-    v = (prior[-1] + 1) if prior else 1
+    held = [
+        int(mm.group(1)) for name in os.listdir(mdir) if (mm := _CLAIM_RE.match(name))
+    ]
+    v = max([*prior[-1:], *held], default=0) + 1
     while True:
         if os.path.exists(os.path.join(mdir, f"v{v}.json")):
             v += 1
@@ -1057,15 +1044,13 @@ def _commit_manifest(table_dir: str, v: int, manifest: dict) -> None:
     # Batch-id keys are lane-namespaced: branch sinks run their own
     # batch counters, so their replay tokens must never shadow main's.
     bid = manifest.get("batch_id")
-    batch_key = None
-    if bid is not None:
-        branch = manifest.get("branch")
-        batch_key = f"branch:{branch}:{bid}" if branch else str(bid)
     _update_main_idx(
         table_dir,
         v,
         is_main="branch" not in manifest,
-        batch_key=batch_key,
+        batch_key=(
+            None if bid is None else _batch_key(manifest.get("branch"), bid)
+        ),
     )
     os.remove(os.path.join(mdir, f".claim-v{v}"))
 
@@ -1078,6 +1063,164 @@ def _release_claim(table_dir: str, v: int) -> None:
         os.remove(os.path.join(_manifest_dir(table_dir), f".claim-v{v}"))
     except FileNotFoundError:
         pass
+
+
+def _await_predecessors(
+    table_dir: str, v: int, stale_after: float = 600.0, timeout: float = 15.0
+) -> None:
+    """Commit-order serialization: block until every LOWER-numbered
+    live claim has vanished. With this wait in front of every
+    committer's base check, commit order equals claim order, so the
+    base check is authoritative and no concurrent commit can be
+    silently dropped from forward history (the residual check-to-
+    publish window closes). A committed version's claim counts until
+    it is gone: `_commit_manifest` drops it only AFTER the main-line
+    idx update, so waiting for it keeps two committers from updating
+    the idx at once (a successor that read the new head the moment
+    the manifest landed would otherwise rewrite the idx from a copy
+    without its predecessor's entry). A claim older than
+    ``stale_after`` is a crashed writer — its number stays a hole and
+    nobody waits for it; hitting ``timeout`` degrades to the plain
+    optimistic check rather than deadlocking behind a stuck-but-alive
+    writer — safe, because every committer ALSO re-checks its base
+    immediately before the manifest publish and aborts/retries if it
+    moved."""
+    import time as _time
+
+    mdir = _manifest_dir(table_dir)
+    deadline = _time.time() + timeout
+    while _time.time() < deadline:
+        pending = False
+        try:
+            names = os.listdir(mdir)
+        except FileNotFoundError:
+            return
+        for name in names:
+            mm = _CLAIM_RE.match(name)
+            if not mm or int(mm.group(1)) >= v:
+                continue
+            try:
+                age = _time.time() - os.path.getmtime(os.path.join(mdir, name))
+            except FileNotFoundError:
+                continue  # released between listdir and stat
+            if age > stale_after:
+                continue  # crashed writer: permanent hole
+            pending = True
+            break
+        if not pending:
+            return
+        _time.sleep(0.01)
+
+
+class _Claim:
+    """THE claim/release guard every committer goes through:
+    ``with _Claim(table_dir) as claim`` O_EXCL-claims the next free
+    version ``claim.v``, ``claim.wait()`` serializes behind every
+    lower in-flight claim, ``claim.publish(body)`` commits the
+    manifest. Every exit that does not publish — a lost race, a
+    refused gate, a failed data write — releases the claim on the way
+    out, so no successor ever waits on a live writer's leftovers; only
+    a crashed PROCESS strands a claim, until it ages past the stale-
+    claim TTL."""
+
+    def __init__(self, table_dir: str):
+        self.table_dir = table_dir
+        self.published = False
+
+    def __enter__(self) -> "_Claim":
+        self.v = _claim_version(self.table_dir, versions(self.table_dir))
+        return self
+
+    def wait(self) -> None:
+        _await_predecessors(self.table_dir, self.v)
+
+    def publish(self, body: dict) -> int:
+        _commit_manifest(self.table_dir, self.v, {"version": self.v, **body})
+        self.published = True
+        return self.v
+
+    def __exit__(self, *_exc) -> None:
+        if not self.published:
+            _release_claim(self.table_dir, self.v)
+
+
+def _main_head(table_dir: str) -> int | None:
+    mv = main_versions(table_dir)
+    return mv[-1] if mv else None
+
+
+# plan() result meaning "nothing to commit": _transact returns the head
+_NO_COMMIT = object()
+
+
+def _transact(
+    table_dir: str,
+    op: str,
+    plan,
+    build,
+    attempts: int = 4,
+    needs_head: str | None = None,
+) -> int:
+    """THE optimistic-commit loop (the Delta commit protocol) of every
+    main-line committer. Per attempt: load the main head's manifest
+    ``prev``; ``plan(prev)`` runs the pre-claim scans and gates (heavy
+    work stays OUTSIDE the claim window; returning _NO_COMMIT ends the
+    op with no commit and returns the head); claim a version and wait
+    for every lower claim (commit order == claim order, so the base
+    check is authoritative); check the main head is still prev's;
+    ``build(v, prev, planned)`` writes the data and returns the
+    manifest body; check the head AGAIN — the write may have taken
+    long enough for a waiting racer to time out and commit, and
+    publishing now would drop that commit from forward history;
+    publish. A moved head releases the claim and retries against the
+    new head (bytes staged under the lost number become unreferenced
+    orphans vacuum sweeps); ``attempts`` losses raise. The base is the
+    main HEAD, not the version list: a concurrent vacuum or branch
+    commit changes nothing this commit builds on. ``needs_head`` names
+    what the op does to a snapshot and makes an empty main line an
+    error."""
+    for _attempt in range(attempts):
+        base = _main_head(table_dir)
+        if base is None and needs_head:
+            raise ValueError(f"{table_dir}: no committed snapshot to {needs_head}")
+        prev = _load_manifest(table_dir, base) if base is not None else {}
+        planned = plan(prev)
+        if planned is _NO_COMMIT:
+            return base
+        with _Claim(table_dir) as claim:
+            claim.wait()
+            if _main_head(table_dir) != base:
+                continue
+            body = build(claim.v, prev, planned)
+            if _main_head(table_dir) != base:
+                continue
+            return claim.publish(body)
+    raise RuntimeError(
+        f"{op}: lost the optimistic-conflict race {attempts} times on {table_dir}"
+    )
+
+
+_SIDECAR_KEYS = ("dv", "dv_rows", "bloom_cols", "bloom_indexes")
+
+
+def _carry_sidecars(src: dict, keys: tuple = _SIDECAR_KEYS) -> dict:
+    """Metadata-only carry of sidecar state BY NAME (deletion vector,
+    bloom indexes) for commits that keep ``src``'s file list."""
+    return {key: src[key] for key in keys if key in src}
+
+
+def _carry_snapshot(src: dict) -> dict:
+    """Manifest fields that carry snapshot ``src`` BY NAME — file list,
+    stats, footer meta, schema, expectations and sidecars: the body of
+    every metadata-only commit (zero data I/O)."""
+    return {
+        "files": list(src["files"]),
+        "stats": src.get("stats", {}),
+        "file_meta": src.get("file_meta", {}),
+        "schema": src.get("schema"),
+        "expectations": src.get("expectations", {}),
+        **_carry_sidecars(src),
+    }
 
 
 # --- bloom filter index (point-lookup file skipping) -----------------
@@ -1248,9 +1391,7 @@ def _bloom_build_driver(
             or pa.types.is_large_string(t)
         ):
             return None
-    out_f: list[str] = []
-    out_c: list[str] = []
-    out_b: list[bytes] = []
+    entries: list[tuple] = []
     for relf in rels:
         tbl = pq.read_table(
             os.path.join(table_dir, relf), columns=list(have)
@@ -1273,24 +1414,8 @@ def _bloom_build_driver(
                     )
                     buf[pos >> 3] |= 1 << (pos & 7)
             if seen:
-                out_f.append(relf)
-                out_c.append(spec)
-                out_b.append(bytes(buf))
-    dirp = os.path.join(table_dir, rel)
-    os.makedirs(dirp, exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "f": pa.array(out_f, pa.string()),
-                "col": pa.array(out_c, pa.string()),
-                "m": pa.array([m] * len(out_f), pa.int32()),
-                "k": pa.array([k] * len(out_f), pa.int32()),
-                "bits": pa.array(out_b, pa.binary()),
-            }
-        ),
-        os.path.join(dirp, "part-00000.parquet"),
-    )
-    return rel
+                entries.append((relf, spec, bytes(buf)))
+    return _bloom_write_sidecar(table_dir, rel, m, k, entries)
 
 
 def _bloom_write_sidecar(
@@ -1416,7 +1541,11 @@ def _write_bloom_index(
 
     The distributed passes end in a groupBy(f, col) OR-reduce merging
     per-partition bitmaps; only bitmap-sized rows ever shuffle.
-    Returns the index's rel path, or None if there is nothing to do."""
+    Returns the index's rel path, or None if there is nothing to do.
+
+    Precondition: ``rels`` are the commit's staged parquet FILES as
+    `_stage_files` lists them — it has already opened every footer
+    (its row count), so ``rels[0]`` is a readable parquet file."""
     import pandas as pd
 
     if not rels or not cols:
@@ -1428,9 +1557,7 @@ def _write_bloom_index(
     import pyarrow.parquet as pq
 
     probe_cols = set(
-        pq.ParquetFile(
-            _first_parquet_file(os.path.join(table_dir, rels[0]))
-        ).schema_arrow.names
+        pq.ParquetFile(os.path.join(table_dir, rels[0])).schema_arrow.names
     )
     have = [
         spec
@@ -2161,64 +2288,153 @@ def _carry_dv(
     prev: dict,
     untouched: list[str],
     v: int,
-) -> tuple[str | None, int]:
+) -> dict:
     """Rewrite-commit DV maintenance: entries for rewritten files fold
     into the clean rewrite (they were filtered out by `_live_rows`),
     entries for carried files persist into a fresh dataset for the new
-    version. Returns (dv_rel or None, dv_row_count)."""
+    version. Returns the manifest's dv/dv_rows fields ({} = none)."""
     dv = _dv_df(spark, table_dir, prev)
     if dv is None:
-        return None, 0
+        return {}
     keep = dv.where(F.col("f").isin([os.path.normpath(r) for r in untouched]))
     n = keep.count()
     if n == 0:
-        return None, 0
+        return {}
     rel = os.path.join("dv", f"v{v}")
     keep.write.mode("overwrite").parquet(os.path.join(table_dir, rel))
-    return rel, n
+    return {"dv": rel, "dv_rows": n}
 
 
-def _await_predecessors(
-    table_dir: str, v: int, stale_after: float = 600.0, timeout: float = 15.0
-) -> None:
-    """Commit-order serialization: block until every LOWER-numbered
-    live claim has committed or vanished. With this wait in front of
-    every committer's base check, commit order equals claim order, so
-    the base check is authoritative and no concurrent commit can be
-    silently dropped from forward history (the residual check-to-
-    publish window closes). A claim older than ``stale_after`` is a
-    crashed writer — its number stays a hole and nobody waits for it;
-    hitting ``timeout`` degrades to the plain optimistic check rather
-    than deadlocking behind a stuck-but-alive writer — safe, because
-    every committer ALSO re-checks its base immediately before the
-    manifest publish and aborts/retries if it moved."""
-    import time as _time
+def _write_dv(
+    spark: SparkSession,
+    table_dir: str,
+    prev: dict,
+    v: int,
+    positions: DataFrame,
+) -> dict:
+    """Merge-on-read DV commit: fold the new (f, pos) ``positions``
+    into prev's deletion vector (re-deleting an already-deleted row is
+    a distinct() no-op) and write it as ``dv/v<N>``. Returns the
+    manifest's dv/dv_rows fields ({} = empty vector)."""
+    old_dv = _dv_df(spark, table_dir, prev)
+    new_dv = (
+        positions.unionByName(old_dv).distinct()
+        if old_dv is not None
+        else positions.distinct()
+    )
+    rel = os.path.join("dv", f"v{v}")
+    new_dv.write.mode("overwrite").parquet(os.path.join(table_dir, rel))
+    # count from the written footers (metadata-only) — also the
+    # empty-vector guard: a no-match delete on a vector-less table
+    # writes an EMPTY dataset, which must not become a `dv` entry
+    # (an empty parquet dir cannot even be re-read without a schema)
+    _files, meta = _stage_files(table_dir, rel)
+    rows = sum(m["rows"] for m in meta.values())
+    return {"dv": rel, "dv_rows": rows} if rows else {}
 
-    mdir = _manifest_dir(table_dir)
-    deadline = _time.time() + timeout
-    while _time.time() < deadline:
-        pending = False
-        try:
-            names = os.listdir(mdir)
-        except FileNotFoundError:
-            return
-        for name in names:
-            mm = re.match(r"^\.claim-v(\d+)$", name)
-            if not mm or int(mm.group(1)) >= v:
-                continue
-            if os.path.exists(os.path.join(mdir, f"v{mm.group(1)}.json")):
-                continue  # committed; claim removal is racing
-            try:
-                age = _time.time() - os.path.getmtime(os.path.join(mdir, name))
-            except FileNotFoundError:
-                continue  # released between listdir and stat
-            if age > stale_after:
-                continue  # crashed writer: permanent hole
-            pending = True
-            break
-        if not pending:
-            return
-        _time.sleep(0.01)
+
+def _layout_bound(meta: dict) -> bool:
+    """True when a table declares pruning metadata (partitioning,
+    per-file stats, blooms): its file layout is load-bearing for file
+    skipping, so commits keep their staged layout instead of
+    auto-coalescing small ones (see _stage_files)."""
+    return bool(
+        meta.get("partition_by") or meta.get("stats") or meta.get("bloom_cols")
+    )
+
+
+def _split_files(
+    prev: dict, hits: DataFrame | None
+) -> tuple[list[str], list[str]]:
+    """(untouched, affected): prev's files split by whether ``hits`` —
+    a tagged live read (``__f`` column) filtered to the matching rows;
+    None = nothing can match — holds a row from them. The live read
+    applies the deletion vector, so DV-erased rows never mark a file
+    affected; paths compare exactly after normalization (suffix
+    matching would alias same-named files across versions)."""
+    hit = (
+        set()
+        if hits is None
+        else {
+            os.path.normpath(r["__f"])
+            for r in hits.select("__f").distinct().collect()
+        }
+    )
+    untouched = [rel for rel in prev["files"] if os.path.normpath(rel) not in hit]
+    affected = [rel for rel in prev["files"] if os.path.normpath(rel) in hit]
+    return untouched, affected
+
+
+def _rewrite_files(
+    spark: SparkSession,
+    table_dir: str,
+    prev: dict,
+    v: int,
+    carried: list[str],
+    data: DataFrame | None = None,
+    write=None,
+    coalesce_small: bool | None = None,
+    extra_stats: tuple[str, ...] = (),
+    carry_dv: bool = True,
+) -> dict:
+    """THE copy-on-write commit tail. Stages the new files — ``data``
+    (LOGICAL names, written under prev's physical names) or a custom
+    ``write(staging_dir)`` — under ``data/v<N>/`` (auto-coalesced
+    unless the table's layout is load-bearing), carries ``carried``
+    BY NAME with their stats and footer meta (zero I/O), recomputes
+    min/max for the new files over the column set prev tracked (plus
+    ``extra_stats``) so rewritten files keep the table's file-skipping
+    power, appends a bloom index covering the new files, and carries
+    the deletion-vector entries of carried files. A rewrite keeps the
+    snapshot's schema and constraints; every prev file not carried
+    counts as rewritten. Returns the manifest's files/stats/file_meta/
+    schema/expectations/rewrote/carried (+ bloom, + dv) fields."""
+    new_files: list[str] = []
+    new_meta: dict = {}
+    if data is not None or write is not None:
+        rel_dir = os.path.join("data", f"v{v}")
+        staging = os.path.join(table_dir, rel_dir)
+        if write is None:
+            _to_physical(data, _mapping(prev)).write.mode("overwrite").parquet(
+                staging
+            )
+        else:
+            write(staging)
+        new_files, new_meta = _stage_files(
+            table_dir,
+            rel_dir,
+            coalesce_small=(
+                not _layout_bound(prev) if coalesce_small is None else coalesce_small
+            ),
+        )
+    keep = set(carried)
+    stats = {rel: s for rel, s in prev.get("stats", {}).items() if rel in keep}
+    stat_cols = sorted(
+        {c for st in prev.get("stats", {}).values() for c in st}
+        | set(extra_stats)
+    )
+    if stat_cols:
+        for rel in new_files:
+            stats[rel] = _file_stats(os.path.join(table_dir, rel), stat_cols)
+    file_meta = {
+        **{rel: m for rel, m in prev.get("file_meta", {}).items() if rel in keep},
+        **new_meta,
+    }
+    out = {
+        "files": list(carried) + new_files,
+        "stats": stats,
+        "file_meta": file_meta,
+        "schema": prev.get("schema"),
+        "expectations": prev.get("expectations", {}),
+        "rewrote": len(prev["files"]) - len(carried),
+        "carried": len(carried),
+    }
+    out.update(
+        _bloom_manifest_fields(spark, table_dir, prev, new_files, file_meta, v)
+    )
+    if carry_dv:
+        out.update(_carry_dv(spark, table_dir, prev, carried, v))
+    return out
 
 
 def delete_where_mor(
@@ -2232,74 +2448,31 @@ def delete_where_mor(
     `read_changes`, the CoW maintenance ops, `count_rows`) applies the
     vector; a later full `compact()` folds it into clean files and
     drops it. NULL-valued conditions keep the row (SQL DELETE
-    semantics), and rows already deleted dedupe away. Same
-    optimistic-conflict retry discipline as delete_where."""
-    for _attempt in range(4):
-        prior = main_versions(table_dir)
-        if not prior:
-            raise ValueError(f"{table_dir}: no committed snapshot to delete from")
-        prev = _load_manifest(table_dir, prior[-1])
-        cond = F.expr(condition)
+    semantics), and rows already deleted dedupe away. Commits through
+    `_transact` like every committer."""
+
+    def plan(prev: dict) -> DataFrame:
         # positions come from the raw read (pre-anti-join): re-deleting
         # an already-deleted row is a distinct() no-op. The condition
         # speaks LOGICAL names; _read_physical owns the translation.
-        tagged, _cols = _read_physical(
-            spark, table_dir, prev, prev["files"]
-        )
-        matches = (
-            tagged.where(F.coalesce(cond, F.lit(False)))
-            .selectExpr("__f AS f", "__pos AS pos")
-        )
-        old_dv = _dv_df(spark, table_dir, prev)
-        new_dv = (
-            matches.unionByName(old_dv).distinct()
-            if old_dv is not None
-            else matches.distinct()
-        )
-        v = _claim_version(table_dir, versions(table_dir))
-        _await_predecessors(table_dir, v)
-        if main_versions(table_dir)[-1] != prior[-1]:
-            _release_claim(table_dir, v)
-            continue
-        dv_rel = os.path.join("dv", f"v{v}")
-        new_dv.write.mode("overwrite").parquet(os.path.join(table_dir, dv_rel))
-        # count from the written footers (metadata-only) — also the
-        # empty-vector guard: a no-match delete on a vector-less table
-        # writes an EMPTY dataset, which must not become a `dv` entry
-        # (an empty parquet dir cannot even be re-read without a schema)
-        _dv_files, _dv_meta = _stage_files(table_dir, dv_rel)
-        dv_rows = sum(m["rows"] for m in _dv_meta.values())
-        manifest = {
-            "version": v,
+        tagged, _cols = _read_physical(spark, table_dir, prev, prev["files"])
+        return tagged.where(
+            F.coalesce(F.expr(condition), F.lit(False))
+        ).selectExpr("__f AS f", "__pos AS pos")
+
+    def build(v: int, prev: dict, matches: DataFrame) -> dict:
+        return {
             "mode": "delete",
             "condition": condition,
-            "files": list(prev["files"]),
-            "stats": prev.get("stats", {}),
-            "file_meta": prev.get("file_meta", {}),
-            "schema": prev.get("schema"),
-            "expectations": prev.get("expectations", {}),
+            **_carry_snapshot(prev),
+            # the new vector holds prev's entries too: it replaces prev's
+            **_write_dv(spark, table_dir, prev, v, matches),
             "rewrote": 0,
             "carried": len(prev["files"]),
         }
-        if dv_rows:
-            manifest["dv"] = dv_rel
-            manifest["dv_rows"] = dv_rows
-        if prev.get("bloom_cols"):
-            manifest["bloom_cols"] = prev["bloom_cols"]
-            if prev.get("bloom_indexes"):
-                manifest["bloom_indexes"] = prev["bloom_indexes"]
-        # FINAL base re-check: the data write above may have taken
-        # long enough for a waiting racer to time out and commit —
-        # publishing now would drop that commit from forward history,
-        # so abort and retry against the new head instead (the staged
-        # dir becomes an unreferenced orphan vacuum sweeps)
-        if main_versions(table_dir)[-1] != prior[-1]:
-            _release_claim(table_dir, v)
-            continue
-        _commit_manifest(table_dir, v, manifest)
-        return v
-    raise RuntimeError(
-        f"delete_where_mor: lost the optimistic-conflict race 4 times on {table_dir}"
+
+    return _transact(
+        table_dir, "delete_where_mor", plan, build, needs_head="delete from"
     )
 
 
@@ -2328,112 +2501,33 @@ def delete_where(spark: SparkSession, table_dir: str, condition: str) -> int:
     Concurrency: the affected-file scan is long, so a concurrent
     append can commit a newer version mid-scan; building the delete
     from the manifest that was latest AT ENTRY would silently drop
-    that commit from forward history. After claiming a version this
-    re-checks that the manifest it scanned is still the latest and
-    retries the whole scan otherwise (optimistic conflict, the Delta
-    DELETE retry loop). A commit landing in the narrow window between
-    the re-check and the manifest publish can still be shadowed —
-    full serializability needs a lock service this file-only log
-    deliberately omits.
+    that commit from forward history. `_transact` re-checks the head
+    after claiming and again before publishing, and retries the whole
+    scan against the newer head otherwise (the Delta DELETE retry
+    loop).
     """
-    from urllib.parse import unquote, urlparse
 
-    from pyspark.sql import functions as F
-
-    root = os.path.abspath(table_dir)
-    for _attempt in range(4):
-        prior = main_versions(table_dir)
-        if not prior:
-            raise ValueError(f"{table_dir}: no committed snapshot to delete from")
-        prev = _load_manifest(table_dir, prior[-1])
-        cond = F.expr(condition)
-        # the tagged live read carries each row's file-RELATIVE path
-        # (exact normalized comparison — suffix matching would alias
-        # same-named files across versions) and applies any deletion
-        # vector, so DV-erased rows can neither mark a file affected
-        # nor resurrect in the rewrite.
+    def plan(prev: dict):
         live = _live_rows(spark, table_dir, prev, prev["files"], with_file=True)
-        affected_rel = {
-            os.path.normpath(r["__f"])
-            for r in live.where(cond).select("__f").distinct().collect()
-        }
+        return _split_files(prev, live.where(F.expr(condition)))
 
-        untouched = [
-            rel for rel in prev["files"] if os.path.normpath(rel) not in affected_rel
-        ]
-        affected = [
-            rel for rel in prev["files"] if os.path.normpath(rel) in affected_rel
-        ]
-
-        v = _claim_version(table_dir, versions(table_dir))
-        _await_predecessors(table_dir, v)
-        if main_versions(table_dir)[-1] != prior[-1]:
-            _release_claim(table_dir, v)  # newer commit landed mid-scan
-            continue
-        new_files: list[str] = []
-        new_meta: dict = {}
-        if affected:
-            keep = _live_rows(spark, table_dir, prev, affected).where(
-                ~F.coalesce(cond, F.lit(False))
+    def build(v: int, prev: dict, split) -> dict:
+        untouched, affected = split
+        keep = (
+            _live_rows(spark, table_dir, prev, affected).where(
+                ~F.coalesce(F.expr(condition), F.lit(False))
             )
-            rel_dir = os.path.join("data", f"v{v}")
-            staging = os.path.join(table_dir, rel_dir)
-            _to_physical(keep, _mapping(prev)).write.mode(
-                "overwrite"
-            ).parquet(staging)
-            new_files, new_meta = _stage_files(
-                table_dir, rel_dir,
-                coalesce_small=not (prev.get("partition_by") or prev.get("stats") or prev.get("bloom_cols")),
-            )
-        stats = {
-            rel: s for rel, s in prev.get("stats", {}).items() if rel in set(untouched)
-        }
-        # rewritten files keep the table's file-skipping power: recompute
-        # min/max over the same column set the prior manifest tracked
-        prev_stat_cols = sorted({c for st in prev.get("stats", {}).values() for c in st})
-        if prev_stat_cols:
-            for rel in new_files:
-                stats[rel] = _file_stats(os.path.join(table_dir, rel), prev_stat_cols)
-        file_meta = {
-            **{
-                rel: m
-                for rel, m in prev.get("file_meta", {}).items()
-                if rel in set(untouched)
-            },
-            **new_meta,
-        }
-        manifest = {
-            "version": v,
+            if affected
+            else None
+        )
+        return {
             "mode": "delete",
             "condition": condition,
-            "files": untouched + new_files,
-            "stats": stats,
-            "file_meta": file_meta,
-            "schema": prev.get("schema"),
-            "expectations": prev.get("expectations", {}),
-            "rewrote": len(affected),
-            "carried": len(untouched),
+            **_rewrite_files(spark, table_dir, prev, v, untouched, keep),
         }
-        manifest.update(
-            _bloom_manifest_fields(spark, table_dir, prev, new_files, file_meta, v)
-        )
-        dv_rel, dv_rows = _carry_dv(spark, table_dir, prev, untouched, v)
-        if dv_rel:
-            manifest["dv"] = dv_rel
-            manifest["dv_rows"] = dv_rows
-        # FINAL base re-check: the data write above may have taken
-        # long enough for a waiting racer to time out and commit —
-        # publishing now would drop that commit from forward history,
-        # so abort and retry against the new head instead (the staged
-        # dir becomes an unreferenced orphan vacuum sweeps)
-        if main_versions(table_dir)[-1] != prior[-1]:
-            _release_claim(table_dir, v)
-            continue
-        _commit_manifest(table_dir, v, manifest)
-        return v
-    raise RuntimeError(
-        f"delete_where: lost the optimistic-conflict race 4 times on {table_dir}; "
-        "a writer is appending faster than the delete can scan"
+
+    return _transact(
+        table_dir, "delete_where", plan, build, needs_head="delete from"
     )
 
 
@@ -2458,11 +2552,8 @@ def delete_keys(
         raise ValueError("delete_keys: empty key list")
     vset = set(values)
     condition = f"{col} IN ({', '.join(repr(v) for v in sorted(vset))})"
-    for _attempt in range(4):
-        prior = main_versions(table_dir)
-        if not prior:
-            raise ValueError(f"{table_dir}: no committed snapshot to delete from")
-        prev = _load_manifest(table_dir, prior[-1])
+
+    def plan(prev: dict):
         if (
             len(vset) > _BLOOM_DRIVER_KEYS_MAX
             and not _probe_worthwhile(prev)
@@ -2470,7 +2561,7 @@ def delete_keys(
             # wide batch over a handful of files (or KB-scale bytes):
             # the probe job costs more than scanning them — full
             # affected-file scan
-            candidates, _pruned = list(prev["files"]), []
+            candidates, pruned = list(prev["files"]), []
         elif len(vset) > _BLOOM_DRIVER_KEYS_MAX:
             # wide erasure batch: distributed zone+bloom probe — the
             # sidecar bitmaps never land on the driver (select_files_
@@ -2488,99 +2579,42 @@ def delete_keys(
                 *([F.col("_v").cast("long").alias("_rv")] if _ints else []),
             )
             res = select_files_keys(
-                spark, table_dir, prior[-1], [col], kdf, manifest=prev
+                spark, table_dir, prev["version"], [col], kdf, manifest=prev
             )
-            candidates, _pruned = (
+            candidates, pruned = (
                 res if res is not None else (list(prev["files"]), [])
             )
         else:
-            candidates, _pruned = select_files_point(
-                table_dir, prior[-1], col, sorted(vset)
+            candidates, pruned = select_files_point(
+                table_dir, prev["version"], col, sorted(vset)
             )
-        affected_rel: set[str] = set()
-        if candidates:
-            cand_df = _live_rows(
-                spark, table_dir, prev, candidates, with_file=True
+        hits = (
+            _live_rows(spark, table_dir, prev, candidates, with_file=True).where(
+                F.col(col).isin(list(vset))
             )
-            affected_rel = {
-                os.path.normpath(r["__f"])
-                for r in cand_df.where(F.col(col).isin(list(vset)))
-                .select("__f")
-                .distinct()
-                .collect()
-            }
-        untouched = [
-            rel for rel in prev["files"] if os.path.normpath(rel) not in affected_rel
-        ]
-        affected = [
-            rel for rel in prev["files"] if os.path.normpath(rel) in affected_rel
-        ]
-        v = _claim_version(table_dir, versions(table_dir))
-        _await_predecessors(table_dir, v)
-        if main_versions(table_dir)[-1] != prior[-1]:
-            _release_claim(table_dir, v)
-            continue
-        new_files: list[str] = []
-        new_meta: dict = {}
-        if affected:
-            keep = _live_rows(spark, table_dir, prev, affected).where(
+            if candidates
+            else None
+        )
+        return (*_split_files(prev, hits), pruned)
+
+    def build(v: int, prev: dict, planned) -> dict:
+        untouched, affected, pruned = planned
+        keep = (
+            _live_rows(spark, table_dir, prev, affected).where(
                 ~F.col(col).isin(list(vset))
             )
-            rel_dir = os.path.join("data", f"v{v}")
-            _to_physical(keep, _mapping(prev)).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(table_dir, rel_dir))
-            new_files, new_meta = _stage_files(
-                table_dir, rel_dir,
-                coalesce_small=not (prev.get("partition_by") or prev.get("stats") or prev.get("bloom_cols")),
-            )
-        stats = {
-            rel: s for rel, s in prev.get("stats", {}).items() if rel in set(untouched)
-        }
-        prev_stat_cols = sorted({c for st in prev.get("stats", {}).values() for c in st})
-        if prev_stat_cols:
-            for rel in new_files:
-                stats[rel] = _file_stats(os.path.join(table_dir, rel), prev_stat_cols)
-        file_meta = {
-            **{
-                rel: m
-                for rel, m in prev.get("file_meta", {}).items()
-                if rel in set(untouched)
-            },
-            **new_meta,
-        }
-        manifest = {
-            "version": v,
+            if affected
+            else None
+        )
+        return {
             "mode": "delete",
             "condition": condition,
-            "files": untouched + new_files,
-            "stats": stats,
-            "file_meta": file_meta,
-            "schema": prev.get("schema"),
-            "expectations": prev.get("expectations", {}),
-            "rewrote": len(affected),
-            "carried": len(untouched),
-            "bloom_pruned": len(_pruned),
+            **_rewrite_files(spark, table_dir, prev, v, untouched, keep),
+            "bloom_pruned": len(pruned),
         }
-        manifest.update(
-            _bloom_manifest_fields(spark, table_dir, prev, new_files, file_meta, v)
-        )
-        dv_rel, dv_rows = _carry_dv(spark, table_dir, prev, untouched, v)
-        if dv_rel:
-            manifest["dv"] = dv_rel
-            manifest["dv_rows"] = dv_rows
-        # FINAL base re-check: the data write above may have taken
-        # long enough for a waiting racer to time out and commit —
-        # publishing now would drop that commit from forward history,
-        # so abort and retry against the new head instead (the staged
-        # dir becomes an unreferenced orphan vacuum sweeps)
-        if main_versions(table_dir)[-1] != prior[-1]:
-            _release_claim(table_dir, v)
-            continue
-        _commit_manifest(table_dir, v, manifest)
-        return v
-    raise RuntimeError(
-        f"delete_keys: lost the optimistic-conflict race 4 times on {table_dir}"
+
+    return _transact(
+        table_dir, "delete_keys", plan, build, needs_head="delete from"
     )
 
 
@@ -2605,6 +2639,15 @@ def _apply_assignments(df: DataFrame, condition: str, assignments: dict) -> Data
     )
 
 
+def _check_assignments(op: str, prev: dict, assignments: dict) -> None:
+    """UPDATE never evolves schema: every assigned column must exist."""
+    schema = _manifest_schema(prev)
+    if schema is not None:
+        bad = sorted(set(assignments) - {f.name for f in schema.fields})
+        if bad:
+            raise ValueError(f"{op}: unknown columns {bad}")
+
+
 def update_where(
     spark: SparkSession,
     table_dir: str,
@@ -2617,40 +2660,16 @@ def update_where(
     see the pre-update row, standard SQL UPDATE semantics). Only files
     HOLDING a matching row rewrite; untouched files carry by name;
     table CHECK expectations re-enforce on the rewritten rows, and a
-    violating update is refused with nothing published. Assigned
-    columns must already exist (UPDATE never evolves schema). Same
-    tagged DV-aware scan, optimistic-conflict retry, and atomic
-    manifest publish as delete_where."""
-    for _attempt in range(4):
-        prior = main_versions(table_dir)
-        if not prior:
-            raise ValueError(f"{table_dir}: no committed snapshot to update")
-        prev = _load_manifest(table_dir, prior[-1])
-        schema = _manifest_schema(prev)
-        if schema is not None:
-            known = {f.name for f in schema.fields}
-            bad = sorted(set(assignments) - known)
-            if bad:
-                raise ValueError(f"update_where: unknown columns {bad}")
-        cond = F.expr(condition)
+    violating update is refused with nothing published (the gate runs
+    before the claim). Assigned columns must already exist (UPDATE
+    never evolves schema). Same tagged DV-aware scan, optimistic-
+    conflict retry, and atomic manifest publish as delete_where."""
+
+    def plan(prev: dict):
+        _check_assignments("update_where", prev, assignments)
         live = _live_rows(spark, table_dir, prev, prev["files"], with_file=True)
-        affected_rel = {
-            os.path.normpath(r["__f"])
-            for r in live.where(cond).select("__f").distinct().collect()
-        }
-        untouched = [
-            rel for rel in prev["files"] if os.path.normpath(rel) not in affected_rel
-        ]
-        affected = [
-            rel for rel in prev["files"] if os.path.normpath(rel) in affected_rel
-        ]
-        v = _claim_version(table_dir, versions(table_dir))
-        _await_predecessors(table_dir, v)
-        if main_versions(table_dir)[-1] != prior[-1]:
-            _release_claim(table_dir, v)
-            continue
-        new_files: list[str] = []
-        new_meta: dict = {}
+        untouched, affected = _split_files(prev, live.where(F.expr(condition)))
+        updated = None
         if affected:
             updated = _apply_assignments(
                 _live_rows(spark, table_dir, prev, affected), condition, assignments
@@ -2658,61 +2677,17 @@ def update_where(
             exp = prev.get("expectations", {})
             if exp:
                 _enforce_expectations(updated, exp)
-            rel_dir = os.path.join("data", f"v{v}")
-            _to_physical(updated, _mapping(prev)).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(table_dir, rel_dir))
-            new_files, new_meta = _stage_files(
-                table_dir, rel_dir,
-                coalesce_small=not (prev.get("partition_by") or prev.get("stats") or prev.get("bloom_cols")),
-            )
-        stats = {
-            rel: s for rel, s in prev.get("stats", {}).items() if rel in set(untouched)
-        }
-        prev_stat_cols = sorted({c for st in prev.get("stats", {}).values() for c in st})
-        if prev_stat_cols:
-            for rel in new_files:
-                stats[rel] = _file_stats(os.path.join(table_dir, rel), prev_stat_cols)
-        file_meta = {
-            **{
-                rel: m
-                for rel, m in prev.get("file_meta", {}).items()
-                if rel in set(untouched)
-            },
-            **new_meta,
-        }
-        manifest = {
-            "version": v,
+        return untouched, updated
+
+    def build(v: int, prev: dict, planned) -> dict:
+        untouched, updated = planned
+        return {
             "mode": "update",
             "condition": condition,
-            "files": untouched + new_files,
-            "stats": stats,
-            "file_meta": file_meta,
-            "schema": prev.get("schema"),
-            "expectations": prev.get("expectations", {}),
-            "rewrote": len(affected),
-            "carried": len(untouched),
+            **_rewrite_files(spark, table_dir, prev, v, untouched, updated),
         }
-        manifest.update(
-            _bloom_manifest_fields(spark, table_dir, prev, new_files, file_meta, v)
-        )
-        dv_rel, dv_rows = _carry_dv(spark, table_dir, prev, untouched, v)
-        if dv_rel:
-            manifest["dv"] = dv_rel
-            manifest["dv_rows"] = dv_rows
-        # FINAL base re-check: the data write above may have taken
-        # long enough for a waiting racer to time out and commit —
-        # publishing now would drop that commit from forward history,
-        # so abort and retry against the new head instead (the staged
-        # dir becomes an unreferenced orphan vacuum sweeps)
-        if main_versions(table_dir)[-1] != prior[-1]:
-            _release_claim(table_dir, v)
-            continue
-        _commit_manifest(table_dir, v, manifest)
-        return v
-    raise RuntimeError(
-        f"update_where: lost the optimistic-conflict race 4 times on {table_dir}"
-    )
+
+    return _transact(table_dir, "update_where", plan, build, needs_head="update")
 
 
 def update_where_mor(
@@ -2732,17 +2707,9 @@ def update_where_mor(
     re-enforce on the updated rows. Maintenance folds everything in:
     a later full compact purges the vector and merges the delta files
     away."""
-    for _attempt in range(4):
-        prior = main_versions(table_dir)
-        if not prior:
-            raise ValueError(f"{table_dir}: no committed snapshot to update")
-        prev = _load_manifest(table_dir, prior[-1])
-        schema = _manifest_schema(prev)
-        if schema is not None:
-            bad = sorted(set(assignments) - {f.name for f in schema.fields})
-            if bad:
-                raise ValueError(f"update_where_mor: unknown columns {bad}")
-        cond = F.expr(condition)
+
+    def plan(prev: dict):
+        _check_assignments("update_where_mor", prev, assignments)
         # condition and SET expressions speak LOGICAL names;
         # _read_physical owns the physical->logical translation and
         # _to_physical translates back at write time
@@ -2753,7 +2720,7 @@ def update_where_mor(
                 F.col("f").alias("__f"), F.col("pos").alias("__pos")
             )
             tagged = tagged.join(dvr, ["__f", "__pos"], "left_anti")
-        matches = tagged.where(F.coalesce(cond, F.lit(False)))
+        matches = tagged.where(F.coalesce(F.expr(condition), F.lit(False)))
         # one scan feeds both legs: cache the (small) matching set
         matches = matches.localCheckpoint(eager=True)
         updated = _apply_assignments(
@@ -2762,68 +2729,24 @@ def update_where_mor(
         exp = prev.get("expectations", {})
         if exp:
             _enforce_expectations(updated, exp)
-        v = _claim_version(table_dir, versions(table_dir))
-        _await_predecessors(table_dir, v)
-        if main_versions(table_dir)[-1] != prior[-1]:
-            _release_claim(table_dir, v)
-            continue
-        rel_dir = os.path.join("data", f"v{v}")
-        _to_physical(updated, _mapping(prev)).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(table_dir, rel_dir))
-        new_files, new_meta = _stage_files(
-            table_dir, rel_dir, coalesce_small=not (prev.get("partition_by") or prev.get("stats") or prev.get("bloom_cols"))
-        )
+        return matches, updated
+
+    def build(v: int, prev: dict, planned) -> dict:
+        matches, updated = planned
         new_pos = matches.select(
             F.col("__f").alias("f"), F.col("__pos").alias("pos")
         )
-        new_dv = (
-            new_pos.unionByName(old_dv).distinct()
-            if old_dv is not None
-            else new_pos.distinct()
-        )
-        dv_rel = os.path.join("dv", f"v{v}")
-        new_dv.write.mode("overwrite").parquet(os.path.join(table_dir, dv_rel))
-        # footer-count + empty-vector guard, as in delete_where_mor
-        _dv_files, _dv_meta = _stage_files(table_dir, dv_rel)
-        dv_rows = sum(m["rows"] for m in _dv_meta.values())
-        stats = dict(prev.get("stats", {}))
-        prev_stat_cols = sorted({c for st in stats.values() for c in st})
-        if prev_stat_cols:
-            for rel in new_files:
-                stats[rel] = _file_stats(os.path.join(table_dir, rel), prev_stat_cols)
-        manifest = {
-            "version": v,
+        return {
             "mode": "update",
             "condition": condition,
-            "files": list(prev["files"]) + new_files,
-            "stats": stats,
-            "file_meta": {**prev.get("file_meta", {}), **new_meta},
-            "schema": prev.get("schema"),
-            "expectations": prev.get("expectations", {}),
-            "rewrote": 0,
-            "carried": len(prev["files"]),
+            **_rewrite_files(
+                spark, table_dir, prev, v, prev["files"], updated, carry_dv=False
+            ),
+            **_write_dv(spark, table_dir, prev, v, new_pos),
         }
-        if dv_rows:
-            manifest["dv"] = dv_rel
-            manifest["dv_rows"] = dv_rows
-        manifest.update(
-            _bloom_manifest_fields(
-                spark, table_dir, prev, new_files, new_meta, v
-            )
-        )
-        # FINAL base re-check: the data write above may have taken
-        # long enough for a waiting racer to time out and commit —
-        # publishing now would drop that commit from forward history,
-        # so abort and retry against the new head instead (the staged
-        # dir becomes an unreferenced orphan vacuum sweeps)
-        if main_versions(table_dir)[-1] != prior[-1]:
-            _release_claim(table_dir, v)
-            continue
-        _commit_manifest(table_dir, v, manifest)
-        return v
-    raise RuntimeError(
-        f"update_where_mor: lost the optimistic-conflict race 4 times on {table_dir}"
+
+    return _transact(
+        table_dir, "update_where_mor", plan, build, needs_head="update"
     )
 
 
@@ -2886,7 +2809,6 @@ def merge_into(
     Returns the committed version. `batch_id` is the streaming
     exactly-once replay token (see foreach_batch_merge): a replayed
     micro-batch finds its id in a committed manifest and no-ops."""
-    root = os.path.abspath(table_dir)
     if batch_id is not None:
         pv = _find_batch_commit(table_dir, batch_id)
         if pv is not None:
@@ -2908,8 +2830,8 @@ def merge_into(
     # the cheaper plan.
     _khead = None
     _grouped = source.groupBy(*key_cols).count()
-    _mv0 = main_versions(table_dir)
-    _peek = _load_manifest(table_dir, _mv0[-1]) if _mv0 else None
+    _head0 = _main_head(table_dir)
+    _peek = _load_manifest(table_dir, _head0) if _head0 is not None else None
     if (
         len(key_cols) == 1
         and _peek is not None
@@ -2946,12 +2868,8 @@ def merge_into(
     # dependent select_files_* calls stay inside the loop
     src_dtypes = dict(source.dtypes)
 
-    for _attempt in range(4):
-        prior = main_versions(table_dir)
-        if not prior:
-            raise ValueError(f"{table_dir}: no committed snapshot to merge into")
-        prev = _load_manifest(table_dir, prior[-1])
-        snap = read_version(spark, table_dir, prior[-1])
+    def plan(prev: dict):
+        snap = read_version(spark, table_dir, prev["version"])
         if sorted(source.columns) != sorted(snap.columns):
             raise ValueError(
                 f"merge_into: source columns {sorted(source.columns)} != "
@@ -3003,7 +2921,7 @@ def merge_into(
                 kvals = [r[key_cols[0]] for r in krows]
                 if all(v is not None for v in kvals):
                     scan_rel, _skipped = select_files_point(
-                        table_dir, prior[-1], key_cols[0], kvals
+                        table_dir, prev["version"], key_cols[0], kvals
                     )
                     bloom_pruned = len(_skipped)
                 # else: NULL single-column key -> full scan
@@ -3018,7 +2936,7 @@ def merge_into(
                 res = select_files_keys(
                     spark,
                     table_dir,
-                    prior[-1],
+                    prev["version"],
                     key_cols,
                     _keys_probe_df(source, _spec_logical, src_dtypes),
                     manifest=prev,
@@ -3031,25 +2949,9 @@ def merge_into(
         tagged = _live_rows(
             spark, table_dir, prev, scan_rel, with_file=True
         ).withColumn("_k", key_struct)
-        affected_rel = {
-            os.path.normpath(r["__f"])
-            for r in tagged.join(all_keys, "_k", "left_semi")
-            .select("__f")
-            .distinct()
-            .collect()
-        }
-        untouched = [
-            rel for rel in prev["files"] if os.path.normpath(rel) not in affected_rel
-        ]
-        affected = [
-            rel for rel in prev["files"] if os.path.normpath(rel) in affected_rel
-        ]
-
-        v = _claim_version(table_dir, versions(table_dir))
-        _await_predecessors(table_dir, v)
-        if main_versions(table_dir)[-1] != prior[-1]:
-            _release_claim(table_dir, v)
-            continue
+        untouched, affected = _split_files(
+            prev, tagged.join(all_keys, "_k", "left_semi")
+        )
         eff_upserts = upserts
         if delete_condition is not None and delete_matched_only:
             # ANSI rule: an unmatched delete-marked row is not a
@@ -3068,6 +2970,10 @@ def merge_into(
         exp = prev.get("expectations", {})
         if exp:
             _enforce_expectations(eff_upserts, exp)
+        return untouched, affected, bloom_pruned, eff_upserts, snap
+
+    def build(v: int, prev: dict, planned) -> dict:
+        untouched, affected, bloom_pruned, eff_upserts, snap = planned
         cols = snap.columns
         kept = (
             _live_rows(spark, table_dir, prev, affected)
@@ -3078,64 +2984,17 @@ def merge_into(
             else snap.limit(0)
         )
         new_data = kept.unionByName(eff_upserts.select(*cols))
-        rel_dir = os.path.join("data", f"v{v}")
-        staging = os.path.join(table_dir, rel_dir)
-        _to_physical(new_data, _mapping(prev)).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        new_files, new_meta = _stage_files(
-            table_dir, rel_dir, coalesce_small=not (prev.get("partition_by") or prev.get("stats") or prev.get("bloom_cols"))
-        )
-        stats = {
-            rel: s for rel, s in prev.get("stats", {}).items() if rel in set(untouched)
-        }
-        prev_stat_cols = sorted({c for st in prev.get("stats", {}).values() for c in st})
-        if prev_stat_cols:
-            for rel in new_files:
-                stats[rel] = _file_stats(os.path.join(table_dir, rel), prev_stat_cols)
-        file_meta = {
-            **{
-                rel: m
-                for rel, m in prev.get("file_meta", {}).items()
-                if rel in set(untouched)
-            },
-            **new_meta,
-        }
         manifest = {
-            "version": v,
             "mode": "merge",
-            "files": untouched + new_files,
-            "stats": stats,
-            "file_meta": file_meta,
-            "schema": prev.get("schema"),
-            "expectations": exp,
-            "rewrote": len(affected),
-            "carried": len(untouched),
+            **_rewrite_files(spark, table_dir, prev, v, untouched, new_data),
         }
         if bloom_pruned is not None:
             manifest["bloom_pruned"] = bloom_pruned
-        manifest.update(
-            _bloom_manifest_fields(spark, table_dir, prev, new_files, file_meta, v)
-        )
-        dv_rel, dv_rows = _carry_dv(spark, table_dir, prev, untouched, v)
-        if dv_rel:
-            manifest["dv"] = dv_rel
-            manifest["dv_rows"] = dv_rows
         if batch_id is not None:
             manifest["batch_id"] = batch_id
-        # FINAL base re-check: the data write above may have taken
-        # long enough for a waiting racer to time out and commit —
-        # publishing now would drop that commit from forward history,
-        # so abort and retry against the new head instead (the staged
-        # dir becomes an unreferenced orphan vacuum sweeps)
-        if main_versions(table_dir)[-1] != prior[-1]:
-            _release_claim(table_dir, v)
-            continue
-        _commit_manifest(table_dir, v, manifest)
-        return v
-    raise RuntimeError(
-        f"merge_into: lost the optimistic-conflict race 4 times on {table_dir}"
-    )
+        return manifest
+
+    return _transact(table_dir, "merge_into", plan, build, needs_head="merge into")
 
 
 def foreach_batch_merge(
@@ -3215,11 +3074,11 @@ def compact(
     means nothing to merge: no commit, the current version is
     returned unchanged.
 
-    Concurrency: claims a version first (so a concurrent vacuum
-    treats the staging dir as in-flight, never an orphan) and
-    aborts + retries if a newer version committed since the snapshot
-    it read — same optimistic-conflict discipline and same residual
-    check-to-publish window as delete_where.
+    Concurrency: the rewrite stages under a claimed version (so a
+    concurrent vacuum treats the staging dir as in-flight, never an
+    orphan) and commits through `_transact`, retrying against the
+    newer head if a version committed since the snapshot it read —
+    the same discipline as delete_where.
 
     ``where_stats=(col, lo, hi)`` is the OPTIMIZE WHERE analog: only
     files whose manifest min/max for ``col`` INTERSECTS [lo, hi] are
@@ -3232,12 +3091,7 @@ def compact(
     ``zorder_by``. Files WITHOUT stats for ``col`` are conservatively
     in scope, mirroring select_files' keep-on-unknown rule.
     """
-    for _attempt in range(4):
-        prior = main_versions(table_dir)
-        if not prior:
-            raise ValueError(f"{table_dir}: no committed snapshot to compact")
-        v_read = prior[-1]
-        prev = _load_manifest(table_dir, v_read)
+    def plan(prev: dict):
         scope = list(prev["files"])
         scoped_out: list[str] = []
         if where_stats is not None:
@@ -3255,7 +3109,7 @@ def compact(
             carried = scoped_out
             n_out = max(1, target_files)
             if where_stats is not None and len(to_merge) < 2:
-                return v_read  # scope holds <2 files: nothing to merge
+                return _NO_COMMIT  # scope holds <2 files: nothing to merge
         else:
             meta = prev.get("file_meta", {})
             size = lambda rel: (  # noqa: E731
@@ -3268,105 +3122,70 @@ def compact(
                 rel for rel in scope if size(rel) >= min_file_bytes
             ]
             if len(to_merge) < 2:
-                return v_read  # nothing to merge: no-op, no commit
+                return _NO_COMMIT  # nothing to merge: no-op, no commit
             small_bytes = sum(size(rel) for rel in to_merge)
             n_out = max(1, -(-small_bytes // min_file_bytes))  # ceil
         # the live read applies any deletion vector, so a full rewrite
         # PURGES merge-on-read deletes into clean files by construction
         df = _live_rows(spark, table_dir, prev, to_merge)
-        v = _claim_version(table_dir, versions(table_dir))
-        _await_predecessors(table_dir, v)
-        if main_versions(table_dir)[-1] != v_read:
-            _release_claim(table_dir, v)  # newer commit landed mid-read
-            continue
-        rel_dir = os.path.join("data", f"v{v}")
-        staging = os.path.join(table_dir, rel_dir)
-        pspec = prev.get("partition_by")
-        if zorder_by:
-            # OPTIMIZE ZORDER BY: cluster the rewrite on the Morton
-            # curve of the given columns so footer min/max stats prune
-            # files for predicates on ANY of them (operators/zorder.py;
-            # the maintenance twin of Delta's ZORDER). Stats for the
-            # z-columns are recorded below so skipping works at once.
-            from binance_etl_spark.operators.zorder import write_zordered
+        return carried, n_out, df
 
-            _cm = _mapping(prev)
-            write_zordered(
-                _to_physical(df, _cm),
-                staging,
-                [_cm.get(c, c) for c in zorder_by],
-                n_out,
-            )
-        elif pspec and set(pspec) <= set(df.columns):
-            # the table declares a partition spec: the rewrite must
-            # PRESERVE the hidden-partition clustering (Delta OPTIMIZE
-            # compacts within partitions the same way) — otherwise
-            # maintenance would quietly destroy the equality-pruning
-            # layout write_version built
-            nspec = df.select(*pspec).distinct().count()
-            _to_physical(
-                df.repartitionByRange(
-                    max(n_out, int(nspec), 1), *[F.col(c) for c in pspec]
-                ),
-                _mapping(prev),
-            ).write.mode("overwrite").parquet(staging)
-        else:
-            _to_physical(df.repartition(n_out), _mapping(prev)).write.mode(
-                "overwrite"
-            ).parquet(staging)
-        new_files, file_meta = _stage_files(
-            table_dir, rel_dir, coalesce_small=False
-        )
-        stats = {
-            rel: s for rel, s in prev.get("stats", {}).items() if rel in set(carried)
-        }
-        prev_stat_cols = sorted({c for st in prev.get("stats", {}).values() for c in st})
-        recompute_cols = sorted(
-            set(prev_stat_cols) | set(stats_cols or []) | set(zorder_by or [])
-        )
-        if recompute_cols:
-            for rel in new_files:
-                stats[rel] = _file_stats(os.path.join(table_dir, rel), recompute_cols)
-        file_meta = {
-            **{
-                rel: m
-                for rel, m in prev.get("file_meta", {}).items()
-                if rel in set(carried)
-            },
-            **file_meta,
-        }
-        manifest = {
-            "version": v,
+    def build(v: int, prev: dict, planned) -> dict:
+        carried, n_out, df = planned
+        cmap = _mapping(prev)
+        pspec = prev.get("partition_by")
+
+        def write(staging: str) -> None:
+            if zorder_by:
+                # OPTIMIZE ZORDER BY: cluster the rewrite on the Morton
+                # curve of the given columns so footer min/max stats
+                # prune files for predicates on ANY of them
+                # (operators/zorder.py; the maintenance twin of Delta's
+                # ZORDER). Stats for the z-columns are recorded so
+                # skipping works at once.
+                from binance_etl_spark.operators.zorder import write_zordered
+
+                write_zordered(
+                    _to_physical(df, cmap),
+                    staging,
+                    [cmap.get(c, c) for c in zorder_by],
+                    n_out,
+                )
+            elif pspec and set(pspec) <= set(df.columns):
+                # the table declares a partition spec: the rewrite must
+                # PRESERVE the hidden-partition clustering (Delta
+                # OPTIMIZE compacts within partitions the same way) —
+                # otherwise maintenance would quietly destroy the
+                # equality-pruning layout write_version built
+                nspec = df.select(*pspec).distinct().count()
+                _to_physical(
+                    df.repartitionByRange(
+                        max(n_out, int(nspec), 1), *[F.col(c) for c in pspec]
+                    ),
+                    cmap,
+                ).write.mode("overwrite").parquet(staging)
+            else:
+                _to_physical(df.repartition(n_out), cmap).write.mode(
+                    "overwrite"
+                ).parquet(staging)
+
+        return {
             "mode": "compact",
-            "files": carried + new_files,
-            "stats": stats,
-            "file_meta": file_meta,
-            "schema": prev.get("schema"),
-            "expectations": prev.get("expectations", {}),
-            "compacted_from": v_read,
-            "rewrote": len(to_merge),
-            "carried": len(carried),
+            # the requested file count IS the contract: no auto-coalesce
+            **_rewrite_files(
+                spark,
+                table_dir,
+                prev,
+                v,
+                carried,
+                write=write,
+                coalesce_small=False,
+                extra_stats=(*(stats_cols or []), *(zorder_by or [])),
+            ),
+            "compacted_from": prev["version"],
         }
-        manifest.update(
-            _bloom_manifest_fields(spark, table_dir, prev, new_files, file_meta, v)
-        )
-        dv_rel, dv_rows = _carry_dv(spark, table_dir, prev, carried, v)
-        if dv_rel:
-            manifest["dv"] = dv_rel
-            manifest["dv_rows"] = dv_rows
-        # FINAL base re-check: the data write above may have taken
-        # long enough for a waiting racer to time out and commit —
-        # publishing now would drop that commit from forward history,
-        # so abort and retry against the new head instead (the staged
-        # dir becomes an unreferenced orphan vacuum sweeps)
-        if main_versions(table_dir)[-1] != v_read:
-            _release_claim(table_dir, v)
-            continue
-        _commit_manifest(table_dir, v, manifest)
-        return v
-    raise RuntimeError(
-        f"compact: lost the optimistic-conflict race 4 times on {table_dir}"
-    )
+
+    return _transact(table_dir, "compact", plan, build, needs_head="compact")
 
 
 def select_files(
@@ -3729,6 +3548,33 @@ def vacuum(
         }
     keep = sorted(keep)
     expired = [v for v in vs if v not in keep]
+
+    def in_flight(entry: str, full: str) -> tuple[bool, str | None]:
+        """(live, claim path) for a staging dir: a ``v<N>`` dir under a
+        LIVE version claim (``_manifests/.claim-v<N>``) is an in-flight
+        writer's staging, not a crashed-commit orphan (claim → stage →
+        commit manifest → drop claim; sweeping it would erase files a
+        manifest is about to reference); only a claim past the TTL is
+        a crashed commit we may reclaim. A ``tx-<token>`` dir is staged
+        BEFORE its writer claims: young ones are live writers, only
+        TTL-stale ones are crash debris."""
+        m = re.match(r"^v(\d+)$", entry)
+        claim = (
+            os.path.join(_manifest_dir(table_dir), f".claim-v{m.group(1)}")
+            if m
+            else None
+        )
+        if claim is not None and os.path.exists(claim):
+            if time.time() - os.path.getmtime(claim) < claim_ttl_seconds:
+                return True, claim
+        if m is None:
+            try:
+                if time.time() - os.path.getmtime(full) < claim_ttl_seconds:
+                    return True, claim
+            except FileNotFoundError:
+                return True, claim
+        return False, claim
+
     referenced: set[str] = set()
     for v in keep:
         referenced.update(os.path.normpath(p) for p in _load_manifest(table_dir, v)["files"])
@@ -3766,29 +3612,9 @@ def vacuum(
                 continue
             if rel_dir in all_manifest_dirs:
                 continue
-            m = re.match(r"^v(\d+)$", entry)
-            claim = (
-                os.path.join(_manifest_dir(table_dir), f".claim-v{m.group(1)}")
-                if m
-                else None
-            )
-            if claim is not None and os.path.exists(claim):
-                # A live claim means a writer is staging here RIGHT NOW
-                # (claim → stage data → commit manifest → drop claim);
-                # sweeping it would erase files a manifest is about to
-                # reference. Only a claim past the TTL is a crashed
-                # commit we may reclaim.
-                if time.time() - os.path.getmtime(claim) < claim_ttl_seconds:
-                    continue
-            if m is None:
-                # tx-<token> staging for an in-flight append (no claim
-                # yet — the claim comes at commit time): young dirs are
-                # live writers, only TTL-stale ones are crash debris
-                try:
-                    if time.time() - os.path.getmtime(full) < claim_ttl_seconds:
-                        continue
-                except FileNotFoundError:
-                    continue
+            live, claim = in_flight(entry, full)
+            if live:
+                continue
             has_referenced = any(
                 os.path.normpath(os.path.join(rel_dir, f)) in referenced
                 for f in os.listdir(full)
@@ -3821,22 +3647,8 @@ def vacuum(
             full = os.path.join(side_root, entry)
             if not os.path.isdir(full) or rel_dir in referenced_side:
                 continue
-            m = re.match(r"^v(\d+)$", entry)
-            claim = (
-                os.path.join(_manifest_dir(table_dir), f".claim-v{m.group(1)}")
-                if m
-                else None
-            )
-            if claim is not None and os.path.exists(claim):
-                if time.time() - os.path.getmtime(claim) < claim_ttl_seconds:
-                    continue
-            if m is None:
-                # bloom/tx-<token> staged by an in-flight append: TTL
-                try:
-                    if time.time() - os.path.getmtime(full) < claim_ttl_seconds:
-                        continue
-                except FileNotFoundError:
-                    continue
+            if in_flight(entry, full)[0]:  # bloom/tx-<token> too
+                continue
             if not dry_run:
                 shutil.rmtree(full)
             removed_orphans += 1
@@ -3978,121 +3790,77 @@ def write_branch(
     if r is None or r.get("type") != "branch":
         raise FileNotFoundError(f"no branch {branch!r} in {table_dir}")
     if batch_id is not None:
-        idx = _load_main_idx(table_dir)
-        hit = (idx or {}).get("batch_ids", {}).get(f"branch:{branch}:{batch_id}")
-        if hit is not None:
-            return int(hit)  # replayed micro-batch: already staged
-        tail = versions(table_dir)
-        if idx is not None:
-            tail = [pv for pv in tail if pv > idx["last"]]
-        for pv in tail:
-            m = _load_manifest(table_dir, pv)
-            if m.get("branch") == branch and m.get("batch_id") == batch_id:
-                return pv  # replayed micro-batch: already staged
+        pv = _find_batch_commit(table_dir, batch_id, branch)
+        if pv is not None:
+            return pv  # replayed micro-batch: already staged
     head = _load_manifest(table_dir, r["version"])
     if mode == "append":
-        prev_schema = _manifest_schema(head)
-        if prev_schema is not None:
-            new_fields = {f.name: f.dataType for f in df.schema.fields}
-            # Same physical-name reuse guard as write_version: a new
-            # column named after a renamed-away or dropped column's
-            # PHYSICAL name would make carried files' dead bytes
-            # resurface as the new column's values on read.
-            head_names = {f.name for f in prev_schema.fields}
-            unavailable = (
-                set(_mapping(head).values())
-                | set(head.get("retired_columns", []))
-            ) - head_names
-            for name in new_fields:
-                if name not in head_names and name in unavailable:
-                    raise ValueError(
-                        f"column name {name!r} is the PHYSICAL name of a "
-                        "renamed or dropped column and cannot be reused "
-                        "(files still carry it); pick another name"
-                    )
-            for fld in prev_schema.fields:
-                if fld.name not in new_fields:
-                    raise ValueError(
-                        f"append drops column {fld.name!r}; schema evolution "
-                        "is additive-only (use mode='overwrite' to re-shape)"
-                    )
-                if new_fields[fld.name] != fld.dataType:
-                    raise ValueError(
-                        f"append retypes column {fld.name!r} "
-                        f"({fld.dataType.simpleString()} -> "
-                        f"{new_fields[fld.name].simpleString()})"
-                    )
+        _check_append_schema(head, df.schema)
     effective_exp = dict(expectations or {})
     if mode == "append":
         effective_exp = {**head.get("expectations", {}), **effective_exp}
     if effective_exp:
         _enforce_expectations(df, effective_exp)
-    v = _claim_version(table_dir, versions(table_dir))
-    rel_dir = os.path.join("data", f"v{v}")
     bmap = _mapping(head) if mode == "append" else {}
-    _to_physical(df, bmap).write.mode("overwrite").parquet(
-        os.path.join(table_dir, rel_dir)
-    )
-    new_files, file_meta = _stage_files(
-        table_dir, rel_dir,
-        coalesce_small=not (
-            mode == "append"
-            and (
-                head.get("partition_by")
-                or head.get("stats")
-                or head.get("bloom_cols")
-            )
-        ),
-    )
-    stats = {}
-    if stats_cols:
-        for rel in new_files:
-            stats[rel] = _file_stats(
-                os.path.join(table_dir, rel),
-                [bmap.get(c, c) for c in stats_cols],
-            )
-    if mode == "append":
-        carried = head["files"]
-        stats = {**head.get("stats", {}), **stats}
-        file_meta = {**head.get("file_meta", {}), **file_meta}
-    else:
-        carried = []
-    manifest = {
-        "version": v,
-        "mode": mode,
-        "branch": branch,
-        "parent": r["version"],
-        "files": carried + new_files,
-        "stats": stats,
-        "file_meta": file_meta,
-        "schema": json.loads(df.schema.json()),
-        "expectations": effective_exp,
-        # explicit like write_version: append carries the head's
-        # mapping + retired-name ledger, overwrite clears both (the
-        # new files ARE the physical truth for the branch lane)
-        "column_mapping": bmap,
-        "retired_columns": (
-            list(head.get("retired_columns", [])) if mode == "append" else []
-        ),
-    }
-    if mode == "append":
-        manifest.update(
-            _bloom_manifest_fields(
-                df.sparkSession, table_dir, head, new_files, file_meta, v
-            )
+    with _Claim(table_dir) as claim:
+        v = claim.v
+        rel_dir = os.path.join("data", f"v{v}")
+        _to_physical(df, bmap).write.mode("overwrite").parquet(
+            os.path.join(table_dir, rel_dir)
         )
-    if mode == "append" and head.get("dv"):
-        manifest["dv"] = head["dv"]
-        manifest["dv_rows"] = head.get("dv_rows", 0)
-    if batch_id is not None:
-        manifest["batch_id"] = batch_id
-    # Serialize behind in-flight lower claims before publishing: a
-    # branch commit that publishes ahead of a mid-write main committer
-    # would advance the idx checkpoint past the main version while it
-    # is still unindexed (the late-insert path in _update_main_idx is
-    # the backstop; this wait keeps commit order == claim order).
-    _await_predecessors(table_dir, v)
-    _commit_manifest(table_dir, v, manifest)
+        new_files, file_meta = _stage_files(
+            table_dir,
+            rel_dir,
+            coalesce_small=not (mode == "append" and _layout_bound(head)),
+        )
+        stats = {}
+        if stats_cols:
+            for rel in new_files:
+                stats[rel] = _file_stats(
+                    os.path.join(table_dir, rel),
+                    [bmap.get(c, c) for c in stats_cols],
+                )
+        if mode == "append":
+            carried = head["files"]
+            stats = {**head.get("stats", {}), **stats}
+            file_meta = {**head.get("file_meta", {}), **file_meta}
+        else:
+            carried = []
+        manifest = {
+            "mode": mode,
+            "branch": branch,
+            "parent": r["version"],
+            "files": carried + new_files,
+            "stats": stats,
+            "file_meta": file_meta,
+            "schema": json.loads(df.schema.json()),
+            "expectations": effective_exp,
+            # explicit like write_version: append carries the head's
+            # mapping + retired-name ledger, overwrite clears both (the
+            # new files ARE the physical truth for the branch lane)
+            "column_mapping": bmap,
+            "retired_columns": (
+                list(head.get("retired_columns", [])) if mode == "append" else []
+            ),
+        }
+        if mode == "append":
+            manifest.update(
+                _bloom_manifest_fields(
+                    df.sparkSession, table_dir, head, new_files, file_meta, v
+                )
+            )
+            manifest.update(_carry_sidecars(head, ("dv", "dv_rows")))
+        if batch_id is not None:
+            manifest["batch_id"] = batch_id
+        # Serialize behind in-flight lower claims before publishing: a
+        # branch commit that publishes ahead of a mid-write main
+        # committer would advance the idx checkpoint past the main
+        # version while it is still unindexed (the late-insert path in
+        # _update_main_idx is the backstop; this wait keeps commit
+        # order == claim order). No base re-check: the branch head is
+        # this lane's own, and main moving does not touch it.
+        claim.wait()
+        claim.publish(manifest)
     _write_ref(table_dir, branch, {**r, "version": v}, create=False)
     return v
 
@@ -4154,42 +3922,26 @@ def publish_branch(
         if spark is None:
             raise ValueError("audit requires a SparkSession")
         _enforce_expectations(read_version(spark, table_dir, head_v), audit)
-    for _attempt in range(4):
-        main = main_versions(table_dir)
-        if main and main[-1] != r.get("base", main[-1]):
+
+    def plan(main_head: dict) -> None:
+        base = main_head.get("version")
+        if main_head and base != r.get("base", base):
             raise RuntimeError(
-                f"publish_branch: main advanced to v{main[-1]} past the "
+                f"publish_branch: main advanced to v{base} past the "
                 f"branch fork base v{r.get('base')}; fast-forward publish "
                 "would drop those commits — re-branch and re-stage"
             )
-        v = _claim_version(table_dir, versions(table_dir))
-        _await_predecessors(table_dir, v)
-        if main_versions(table_dir) != main:
-            _release_claim(table_dir, v)
-            continue
-        manifest = {
-            "version": v,
+
+    def build(_v: int, _prev: dict, _planned) -> dict:
+        return {
             "mode": "publish",
             "published_from": head_v,
-            "files": head["files"],
-            "stats": head.get("stats", {}),
-            "file_meta": head.get("file_meta", {}),
-            "schema": head.get("schema"),
-            "expectations": head.get("expectations", {}),
+            **_carry_snapshot(head),
         }
-        if head.get("bloom_cols"):
-            manifest["bloom_cols"] = head["bloom_cols"]
-            if head.get("bloom_indexes"):
-                manifest["bloom_indexes"] = head["bloom_indexes"]
-        if head.get("dv"):
-            manifest["dv"] = head["dv"]
-            manifest["dv_rows"] = head.get("dv_rows", 0)
-        _commit_manifest(table_dir, v, manifest)
-        _write_ref(table_dir, branch, {**r, "base": v}, create=False)
-        return v
-    raise RuntimeError(
-        f"publish_branch: lost the optimistic-conflict race 4 times on {table_dir}"
-    )
+
+    v = _transact(table_dir, "publish_branch", plan, build)
+    _write_ref(table_dir, branch, {**r, "base": v}, create=False)
+    return v
 
 
 # --- restore + shallow clone -----------------------------------------
@@ -4209,36 +3961,19 @@ def restore(table_dir: str, version: int) -> int:
     if version not in vs:
         raise FileNotFoundError(f"snapshot v{version} not committed in {table_dir}")
     src = _load_manifest(table_dir, version)
-    for _attempt in range(4):
-        main = main_versions(table_dir)
-        v = _claim_version(table_dir, vs)
-        _await_predecessors(table_dir, v)
-        if main_versions(table_dir) != main:
-            _release_claim(table_dir, v)
-            vs = versions(table_dir)
-            continue
-        manifest = {
-            "version": v,
+
+    def build(_v: int, _prev: dict, _planned) -> dict:
+        return {
             "mode": "restore",
             "restored_from": version,
-            "files": list(src["files"]),
-            "stats": src.get("stats", {}),
-            "file_meta": src.get("file_meta", {}),
-            "schema": src.get("schema"),
-            "expectations": src.get("expectations", {}),
+            **_carry_snapshot(src),
             # the restored version's OWN mapping/ledger, even {} — the
             # current head's must not leak onto older bytes
             "column_mapping": src.get("column_mapping", {}),
             "retired_columns": src.get("retired_columns", []),
         }
-        for key in ("dv", "dv_rows", "bloom_cols", "bloom_indexes"):
-            if key in src:
-                manifest[key] = src[key]
-        _commit_manifest(table_dir, v, manifest)
-        return v
-    raise RuntimeError(
-        f"restore: lost the optimistic-conflict race 4 times on {table_dir}"
-    )
+
+    return _transact(table_dir, "restore", lambda _prev: None, build)
 
 
 def shallow_clone(src_dir: str, dst_dir: str, version: int | None = None) -> int:
@@ -4275,7 +4010,6 @@ def shallow_clone(src_dir: str, dst_dir: str, version: int | None = None) -> int
     files = [absolutize(rel) for rel in m["files"]]
     remap = dict(zip(m["files"], files))
     manifest = {
-        "version": 1,
         "mode": "clone",
         "cloned_from": {"table": src_abs, "version": version},
         "files": files,
@@ -4296,9 +4030,8 @@ def shallow_clone(src_dir: str, dst_dir: str, version: int | None = None) -> int
         manifest["bloom_indexes"] = [
             absolutize(rel) for rel in m.get("bloom_indexes", [])
         ]
-    v = _claim_version(dst_dir, [])
-    _commit_manifest(dst_dir, v, manifest)
-    return v
+    with _Claim(dst_dir) as claim:
+        return claim.publish(manifest)
 
 
 def add_columns(table_dir: str, new_fields: dict[str, str]) -> int:
@@ -4315,17 +4048,8 @@ def add_columns(table_dir: str, new_fields: dict[str, str]) -> int:
 
     if not new_fields:
         raise ValueError("add_columns: no fields given")
-    for _attempt in range(4):
-        prior = main_versions(table_dir)
-        if not prior:
-            raise ValueError(f"{table_dir}: no committed snapshot to alter")
-        prev = _load_manifest(table_dir, prior[-1])
-        schema = _manifest_schema(prev)
-        if schema is None:
-            raise ValueError(
-                f"{table_dir}: latest manifest predates versioned schemas; "
-                "recommit (any append) before altering"
-            )
+
+    def fields(prev: dict, schema) -> dict:
         existing = {f.name for f in schema.fields}
         dup = sorted(set(new_fields) & existing)
         if dup:
@@ -4347,30 +4071,14 @@ def add_columns(table_dir: str, new_fields: dict[str, str]) -> int:
                 for name, t in sorted(new_fields.items())
             ]
         )
-        v = _claim_version(table_dir, versions(table_dir))
-        _await_predecessors(table_dir, v)
-        if main_versions(table_dir)[-1] != prior[-1]:
-            _release_claim(table_dir, v)
-            continue
-        manifest = {
-            "version": v,
+        return {
             "mode": "alter",
             "added_columns": sorted(new_fields),
-            "files": list(prev["files"]),
-            "stats": prev.get("stats", {}),
-            "file_meta": prev.get("file_meta", {}),
             "schema": json.loads(extended.json()),
-            "expectations": prev.get("expectations", {}),
             "column_mapping": _mapping(prev),
         }
-        for key in ("dv", "dv_rows", "bloom_cols", "bloom_indexes"):
-            if key in prev:
-                manifest[key] = prev[key]
-        _commit_manifest(table_dir, v, manifest)
-        return v
-    raise RuntimeError(
-        f"add_columns: lost the optimistic-conflict race 4 times on {table_dir}"
-    )
+
+    return _alter_commit(table_dir, "add_columns", fields)
 
 
 def _constraint_refs(prev: dict, name: str) -> list[str]:
@@ -4396,44 +4104,26 @@ def _constraint_refs(prev: dict, name: str) -> list[str]:
     return refs
 
 
-def _alter_mapping_commit(table_dir: str, op: str, build) -> int:
-    """Shared optimistic-commit loop for the metadata-only schema
-    edits (rename/drop): `build(prev, schema)` returns the manifest
-    field overrides or raises."""
-    for _attempt in range(4):
-        prior = main_versions(table_dir)
-        if not prior:
-            raise ValueError(f"{table_dir}: no committed snapshot to alter")
-        prev = _load_manifest(table_dir, prior[-1])
+def _alter_commit(table_dir: str, op: str, fields) -> int:
+    """Metadata-only commit (ADD/RENAME/DROP COLUMN, ADD/DROP
+    CONSTRAINT) through `_transact`: the head's file list, stats,
+    footer meta, expectations and sidecars carry BY NAME — zero data
+    I/O. ``fields(prev, schema)`` validates before the claim (raising
+    refuses the edit) and returns the manifest fields it changes."""
+
+    def plan(prev: dict) -> dict:
         schema = _manifest_schema(prev)
         if schema is None:
             raise ValueError(
                 f"{table_dir}: latest manifest predates versioned schemas; "
                 "recommit (any append) before altering"
             )
-        overrides = build(prev, schema)
-        v = _claim_version(table_dir, versions(table_dir))
-        _await_predecessors(table_dir, v)
-        if main_versions(table_dir)[-1] != prior[-1]:
-            _release_claim(table_dir, v)
-            continue
-        manifest = {
-            "version": v,
-            "mode": op,
-            "files": list(prev["files"]),
-            "stats": prev.get("stats", {}),
-            "file_meta": prev.get("file_meta", {}),
-            "expectations": prev.get("expectations", {}),
-            **overrides,
-        }
-        for key in ("dv", "dv_rows", "bloom_cols", "bloom_indexes"):
-            if key in prev:
-                manifest[key] = prev[key]
-        _commit_manifest(table_dir, v, manifest)
-        return v
-    raise RuntimeError(
-        f"{op}: lost the optimistic-conflict race 4 times on {table_dir}"
-    )
+        return fields(prev, schema)
+
+    def build(_v: int, prev: dict, changed: dict) -> dict:
+        return {"mode": op, **_carry_snapshot(prev), **changed}
+
+    return _transact(table_dir, op, plan, build, needs_head="alter")
 
 
 def rename_column(table_dir: str, old: str, new: str) -> int:
@@ -4451,7 +4141,7 @@ def rename_column(table_dir: str, old: str, new: str) -> int:
     physical name (reusing it would alias old bytes)."""
     from pyspark.sql.types import StructField, StructType
 
-    def build(prev: dict, schema) -> dict:
+    def fields(prev: dict, schema) -> dict:
         names = [f.name for f in schema.fields]
         if old not in names:
             raise ValueError(f"rename_column: no column {old!r}")
@@ -4489,7 +4179,7 @@ def rename_column(table_dir: str, old: str, new: str) -> int:
             "retired_columns": sorted(retired),
         }
 
-    return _alter_mapping_commit(table_dir, "rename_column", build)
+    return _alter_commit(table_dir, "rename_column", fields)
 
 
 def drop_column(table_dir: str, name: str) -> int:
@@ -4503,7 +4193,7 @@ def drop_column(table_dir: str, name: str) -> int:
     `rename_column`; dropping the last column is refused."""
     from pyspark.sql.types import StructType
 
-    def build(prev: dict, schema) -> dict:
+    def fields(prev: dict, schema) -> dict:
         names = [f.name for f in schema.fields]
         if name not in names:
             raise ValueError(f"drop_column: no column {name!r}")
@@ -4526,7 +4216,7 @@ def drop_column(table_dir: str, name: str) -> int:
             "retired_columns": retired,
         }
 
-    return _alter_mapping_commit(table_dir, "drop_column", build)
+    return _alter_commit(table_dir, "drop_column", fields)
 
 
 def add_constraint(
@@ -4538,7 +4228,7 @@ def add_constraint(
     every existing row already satisfies it; one aggregate scan, the
     same gate every later append re-enforces). Duplicate names raise."""
 
-    def build(prev: dict, schema) -> dict:
+    def fields(prev: dict, schema) -> dict:
         exp = dict(prev.get("expectations", {}))
         if name in exp:
             raise ValueError(f"add_constraint: {name!r} already exists")
@@ -4551,7 +4241,7 @@ def add_constraint(
             "expectations": exp,
         }
 
-    return _alter_mapping_commit(table_dir, "add_constraint", build)
+    return _alter_commit(table_dir, "add_constraint", fields)
 
 
 def drop_constraint(table_dir: str, name: str) -> int:
@@ -4559,7 +4249,7 @@ def drop_constraint(table_dir: str, name: str) -> int:
     metadata commit (later appends stop enforcing it; history keeps
     each version's own constraint set). Unknown names raise."""
 
-    def build(prev: dict, schema) -> dict:
+    def fields(prev: dict, schema) -> dict:
         exp = dict(prev.get("expectations", {}))
         if name not in exp:
             raise ValueError(f"drop_constraint: no constraint {name!r}")
@@ -4570,7 +4260,7 @@ def drop_constraint(table_dir: str, name: str) -> int:
             "expectations": exp,
         }
 
-    return _alter_mapping_commit(table_dir, "drop_constraint", build)
+    return _alter_commit(table_dir, "drop_constraint", fields)
 
 
 def describe_detail(table_dir: str) -> dict:

@@ -53,6 +53,20 @@ def pytest_report_header(config):
     return "besk FULL suite (BESK_FULL_SUITE=1)"
 
 
+def _named_node_ids(config) -> list[str]:
+    """Node ids the command line names explicitly (``path::name...``),
+    rewritten relative to the rootdir the way pytest spells nodeids."""
+    out = []
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if not sep:
+            continue
+        full = os.path.join(str(config.invocation_params.dir), path)
+        rel = os.path.relpath(full, str(config.rootpath)).replace(os.sep, "/")
+        out.append(f"{rel}::{rest}")
+    return out
+
+
 def pytest_collection_modifyitems(config, items):
     if not FAST_PROFILE:
         return
@@ -61,10 +75,18 @@ def pytest_collection_modifyitems(config, items):
             slow = set(json.load(f)["deselect"])
     except (OSError, ValueError, KeyError):
         return
+    # a test named on the command line runs even if it is listed: the
+    # profile trims the default sweep, not an explicit request
+    named = _named_node_ids(config)
     keep, drop = [], []
     for item in items:
         mod = os.path.basename(str(item.fspath)).removesuffix(".py")
-        (drop if f"{mod}::{item.name}" in slow else keep).append(item)
+        explicit = any(
+            item.nodeid == n or item.nodeid.startswith((n + "[", n + "::"))
+            for n in named
+        )
+        listed = f"{mod}::{item.name}" in slow
+        (drop if listed and not explicit else keep).append(item)
     if drop:
         config.hook.pytest_deselected(items=drop)
         items[:] = keep

@@ -9,6 +9,8 @@ value-identical."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from binance_etl_spark.operators import snapshots as SNAP
@@ -75,17 +77,35 @@ def test_update_unknown_column_refused(spark, table):
         SNAP.update_where_mor(spark, table, "id = 1", {"nope": "1"})
 
 
+def _claims(table):
+    return sorted(
+        n for n in os.listdir(os.path.join(table, "_manifests"))
+        if n.startswith(".claim-v")
+    )
+
+
 def test_update_respects_check_expectations(spark, table):
     SNAP.write_version(
         _df(spark, 0, 100), table, expectations={"v_nonneg": "v >= 0"}
     )
     with pytest.raises(ValueError, match="expectations violated"):
         SNAP.update_where(spark, table, "id = 5", {"v": "-1"})
-    # nothing published
+    # nothing published, and no version claim left behind: a leaked
+    # claim stalls every later commit until its TTL
     assert SNAP.main_versions(table) == [1]
+    assert _claims(table) == []
     with pytest.raises(ValueError, match="expectations violated"):
         SNAP.update_where_mor(spark, table, "id = 5", {"v": "-1"})
     assert SNAP.main_versions(table) == [1]
+    assert _claims(table) == []
+    # a MERGE whose source row violates the table's CHECK
+    src = spark.createDataFrame(
+        [(5, -7, "2")], "id long, v long, grp string"
+    )
+    with pytest.raises(ValueError, match="expectations violated"):
+        SNAP.merge_into(spark, table, src, ["id"])
+    assert SNAP.main_versions(table) == [1]
+    assert _claims(table) == []
 
 
 def test_mor_update_touches_no_data_files(spark, table):

@@ -125,6 +125,41 @@ def test_claimed_version_is_skipped_not_overwritten(spark, table):
     assert SNAP.read_version(spark, table).count() == 10
 
 
+def test_successor_waits_for_published_predecessor_claim(tmp_path):
+    """A predecessor whose manifest has landed but whose claim is still
+    held is inside _commit_manifest, rewriting main.idx.json. Its
+    successor must wait for the claim itself: proceeding on the
+    manifest alone lets two committers rewrite the idx at once (one
+    clobbers the other's temp file, or drops its entry)."""
+    import threading
+    import time
+
+    mdir = os.path.join(str(tmp_path / "t"), "_manifests")
+    os.makedirs(mdir)
+    for name in ("v1.json", "v2.json", ".claim-v2"):
+        open(os.path.join(mdir, name), "w").close()
+    release = threading.Timer(0.5, os.remove, [os.path.join(mdir, ".claim-v2")])
+    release.start()
+    t0 = time.monotonic()
+    SNAP._await_predecessors(str(tmp_path / "t"), 3)
+    waited = time.monotonic() - t0
+    release.join(timeout=5)
+    assert not release.is_alive()
+    assert waited >= 0.4, f"returned after {waited:.3f}s with the claim held"
+
+
+def test_new_claim_lands_above_every_live_claim(tmp_path):
+    """v2 was claimed and released while v3's committer is in flight:
+    committers wait only for LOWER claims, so a new claimant handed v2
+    would not wait for v3 and both could publish off the same base."""
+    table = str(tmp_path / "t")
+    mdir = os.path.join(table, "_manifests")
+    os.makedirs(mdir)
+    for name in ("v1.json", ".claim-v3"):
+        open(os.path.join(mdir, name), "w").close()
+    assert SNAP._claim_version(table, [1]) == 4
+
+
 def test_delete_where_rewrites_only_affected_files(spark, tmp_path):
     """delete_where must carry untouched files BY NAME (zero I/O,
     byte-shared with prior snapshots), rewrite only files containing
