@@ -449,20 +449,18 @@ def _futures_fixture(n_frames: int) -> tuple[str, dict]:
 def bench_book_sync_futures(spark, n_frames: int = 20_000) -> tuple[float, int]:
     """Futures-market twin of bench_book_sync: same replay -> parse ->
     stateful sync -> materialize pipeline through the pu-continuity
-    protocol (streaming/book_sync_futures.py), so the newly-implemented
+    rule (streaming/book_sync.py, market "usdm_futures"), so the futures
     market path carries its own round-over-round throughput number."""
     path, snapshot = _futures_fixture(n_frames)
     from binance_etl_spark.sources.replay import read_replay
-    from binance_etl_spark.streaming.book_sync_futures import (
-        book_sync_batch_futures,
-        parse_depth_updates_futures,
-    )
+    from binance_etl_spark.streaming.book_sync import book_sync_batch
+    from binance_etl_spark.streaming.parse import parse_depth_updates
 
     t0 = time.perf_counter()
-    updates = parse_depth_updates_futures(
-        read_replay(spark, path, lines_per_partition=2500)
+    updates = parse_depth_updates(
+        read_replay(spark, path, lines_per_partition=2500), "usdm_futures"
     )
-    synced = book_sync_batch_futures(updates, {"BTCUSDT": snapshot})
+    synced = book_sync_batch(updates, {"BTCUSDT": snapshot}, "usdm_futures")
     n = materialize(synced)
     return time.perf_counter() - t0, n
 
@@ -512,10 +510,6 @@ def bench_streaming_sustained(
     """
     from binance_etl_spark.sources.replay import stream_replay
     from binance_etl_spark.streaming.book_sync import book_sync_stream_tws
-    from binance_etl_spark.streaming.book_sync_futures import (
-        book_sync_stream_futures_tws,
-        parse_depth_updates_futures,
-    )
     from binance_etl_spark.streaming.parse import parse_depth_updates
 
     provider_key = "spark.sql.streaming.stateStore.providerClass"
@@ -550,9 +544,12 @@ def bench_streaming_sustained(
         q.stop()
         fwpath, fwsnap = _futures_fixture(3)
         q = start(
-            book_sync_stream_futures_tws(
-                parse_depth_updates_futures(stream_replay(spark, fwpath, 10)),
+            book_sync_stream_tws(
+                parse_depth_updates(
+                    stream_replay(spark, fwpath, 10), "usdm_futures"
+                ),
                 {"BTCUSDT": fwsnap},
+                market="usdm_futures",
             )
         )
         q.processAllAvailable()
@@ -584,13 +581,15 @@ def bench_streaming_sustained(
             )
         )
         q2 = start(
-            book_sync_stream_futures_tws(
-                parse_depth_updates_futures(
+            book_sync_stream_tws(
+                parse_depth_updates(
                     stream_replay(
                         spark, fpath, n_frames + 10, lines_per_partition=4000
-                    )
+                    ),
+                    "usdm_futures",
                 ),
                 {"BTCUSDT": fsnap},
+                market="usdm_futures",
             )
         )
         qa = (

@@ -378,26 +378,26 @@ _FUT_BOOK_SYNC_ORACLE = f"""
 @register(
     "book_sync_futures_replay",
     oracle=_FUT_BOOK_SYNC_ORACLE,
-    doc="FUTURES order-book synchronization (usdm/coinm — the markets "
-    "the reference recognizes but stubs, factory.py:26-29) over the "
-    "futures depth fixture: pu-continuity replaces spot's U==prev_u+1 "
-    "rule, staleness is u < lastUpdateId, the bridge is "
-    "U <= lastUpdateId <= u (public Binance futures local-order-book "
-    "protocol). Oracle = hand-written golden table. Same stateful "
-    "applyInPandas(WithState) shape as the spot sync — per-symbol "
-    "keyed state, no shuffle beyond the key partitioning; streaming "
-    "twin + runner e2e: tests/test_book_sync_futures.py.",
+    doc="FUTURES order-book sync over the futures depth fixture by the "
+    "one state machine (streaming/book_sync.py) under the futures rule "
+    "(bridge id b = lastUpdateId, pu == prev u; spot: b = "
+    "lastUpdateId+1, U == prev u + 1). Stale iff u < b, bridge iff "
+    "U <= b <= u in both. usdm/coinm are the markets the reference "
+    "recognizes but stubs (factory.py:26-29); the rules follow the "
+    "public Binance futures local-order-book protocol. Oracle = "
+    "hand-written golden table. "
+    "Per-symbol keyed state, no shuffle beyond the key partitioning; "
+    "streaming twins + runner e2e: tests/test_book_sync_futures.py.",
     tags=("streaming-analog", "stateful", "market"),
 )
 def book_sync_futures_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from binance_etl_spark.streaming.book_sync_futures import (
-        book_sync_batch_futures,
-        parse_depth_updates_futures,
-    )
-
     paths = _fixture_dir()
-    updates = parse_depth_updates_futures(read_replay(spark, paths["futures_depth"]))
-    synced = book_sync_batch_futures(updates, {FX.FUT_SYMBOL: FX.futures_snapshot()})
+    updates = parse_depth_updates(
+        read_replay(spark, paths["futures_depth"]), "usdm_futures"
+    )
+    synced = book_sync_batch(
+        updates, {FX.FUT_SYMBOL: FX.futures_snapshot()}, "usdm_futures"
+    )
     return synced.withColumn(
         "price", F.col("price").cast("decimal(27,8)").cast("double")
     ).withColumn("quantity", F.col("quantity").cast("decimal(27,8)").cast("double"))

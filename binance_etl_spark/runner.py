@@ -39,7 +39,8 @@ from binance_etl_spark.streaming.pipelines import (
 # them (factory.py:26-29 fall through to the generic raise). The
 # engine implements them: futures trade frames parse with the spot
 # trade parser (same public field set), and futures depth runs the
-# pu-continuity sync protocol (streaming/book_sync_futures.py).
+# futures rule of the one book-sync state machine
+# (streaming/book_sync.py: bridge at lastUpdateId, pu-continuity).
 MARKETS = ("spot", "usdm_futures", "coinm_futures")
 SUPPORTED = {(m, e) for m in MARKETS for e in ("trade", "depth")}
 

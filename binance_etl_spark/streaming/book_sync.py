@@ -1,23 +1,37 @@
-"""Stateful order-book synchronization (SURVEY.md hard-part 1).
+"""Stateful order-book synchronization (SURVEY.md hard-part 1) for every
+market the runner accepts.
 
 Reproduces the reference's sync state machine (book_utils.py:17-51 +
 spot_depth_etl.py:35-54) with Spark-native semantics:
 
 - deltas arriving before the snapshot is available are BUFFERED
   (list state; reference buffers in a Python list, book_utils.py:24);
-- once the snapshot is known: stale deltas (u <= lastUpdateId) are
-  dropped (book_utils.py:34-38), the bridging delta satisfies
-  U <= lastUpdateId+1 <= u (book_utils.py:40-47), snapshot rows are
-  emitted first with timestamp = local_timestamp - 1 and
-  is_snapshot = true (spot_depth_etl.py:114-123), then buffered deltas
-  replay in order (spot_depth_etl.py:50-52);
-- sequence gaps (U != prev_u + 1) are FLAGGED on the row, not raised
-  (the reference crashes the stream, spot_depth_etl.py:41-42 — the
-  engine routes to a DLQ filter instead).
+- once the snapshot is known, with bridge id b derived from its
+  lastUpdateId: stale deltas (u < b) are dropped (book_utils.py:34-38),
+  the bridging delta satisfies U <= b <= u (book_utils.py:40-47),
+  snapshot rows are emitted first with timestamp = local_timestamp - 1
+  and is_snapshot = true (spot_depth_etl.py:114-123), then buffered
+  deltas replay in order (spot_depth_etl.py:50-52);
+- continuity breaks are FLAGGED on the row, not raised (the reference
+  crashes the stream, spot_depth_etl.py:41-42 — the engine routes to a
+  DLQ filter instead).
 
-One pure-Python core (`_sync_step`) is shared by:
-- `book_sync_batch`   — groupBy(symbol).applyInPandas (batch twin),
-- `BookSyncProcessor` — transformWithStateInPandas (streaming),
+The public Binance diff-depth protocols of spot and of the futures
+markets the reference stubs (factory.py:26-29: `usdm_futures` /
+`coinm_futures`, which share one protocol) differ in exactly two facts,
+held per market in a `MarketRule`:
+
+    market    bridge id b         continuity after an event ending at prev_u
+    spot      lastUpdateId + 1    U == prev_u + 1
+    futures   lastUpdateId        pu == prev_u  (pu = previous event's u)
+
+Futures events carry `pu`, so their delta schema has one more column.
+
+One pure-Python core (`_sync_step`) and one per-key body (`_KeySync`)
+are shared by:
+- `book_sync_batch`    — groupBy(symbol).applyInPandas (batch twin),
+- `book_sync_stream`   — applyInPandasWithState (streaming),
+- `BookSyncProcessor`  — transformWithStateInPandas (streaming),
 so batch/stream equivalence is structural, not coincidental.
 
 Scale: state per key is O(1) after sync (synced flag + prev_u); the
@@ -32,11 +46,19 @@ import json
 from dataclasses import dataclass, field
 
 import pandas as pd
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 # Flat processor I/O schemas (list-state friendly: primitives only).
+# A delta schema is also the tWS buffer schema of its market, so both
+# stay byte-stable for existing checkpoints.
 DELTA_SCHEMA = (
     "symbol STRING, timestamp BIGINT, local_timestamp BIGINT, "
     "first_update_id BIGINT, last_update_id BIGINT, "
+    "bids_json STRING, asks_json STRING, seq BIGINT"
+)
+FUT_DELTA_SCHEMA = (
+    "symbol STRING, timestamp BIGINT, local_timestamp BIGINT, "
+    "first_update_id BIGINT, last_update_id BIGINT, prev_final_id BIGINT, "
     "bids_json STRING, asks_json STRING, seq BIGINT"
 )
 SYNC_OUT_SCHEMA = (
@@ -55,6 +77,36 @@ OUT_COLS = [
     "update_id",
     "gap",
 ]
+STATE_SCHEMA = "synced BOOLEAN, prev_u BIGINT, buffer_json STRING"
+
+
+@dataclass(frozen=True)
+class MarketRule:
+    """One market's diff-depth protocol. The bridge id is
+    b = lastUpdateId + bridge_offset; once synced, a delta continues the
+    book iff delta[link_col] == prev_u + link_offset."""
+
+    bridge_offset: int
+    link_col: str
+    link_offset: int
+    delta_schema: str
+
+    @property
+    def delta_cols(self) -> list[str]:
+        return [f.split()[0] for f in self.delta_schema.split(", ")]
+
+
+SPOT = MarketRule(1, "first_update_id", 1, DELTA_SCHEMA)
+FUTURES = MarketRule(0, "prev_final_id", 0, FUT_DELTA_SCHEMA)
+RULES = {"spot": SPOT, "usdm_futures": FUTURES, "coinm_futures": FUTURES}
+
+
+def market_rule(market: str) -> MarketRule:
+    """The sync rule of a runner market id (runner.parse_event_id)."""
+    try:
+        return RULES[market]
+    except KeyError:
+        raise ValueError(f"no depth sync rule for market {market!r}") from None
 
 
 @dataclass
@@ -76,32 +128,29 @@ def _emit_delta(out: list, d: dict, gap: bool) -> None:
                  json.loads(d["asks_json"]), False, d["last_update_id"], gap)
 
 
-def _sync_step(state: SyncState, deltas: list[dict], snapshot: dict | None) -> list[tuple]:
+def _sync_step(state: SyncState, deltas: list[dict], snapshot: dict | None, rule: MarketRule = SPOT) -> list[tuple]:
     """Advance the state machine over in-order deltas; returns emitted
     rows. `snapshot` is None while the REST snapshot is not yet
     available (deltas buffer), a dict afterwards."""
     out: list[tuple] = []
     for d in deltas:
-        if state.synced:
-            gap = d["first_update_id"] != state.prev_u + 1
-            _emit_delta(out, d, gap)
-            state.prev_u = d["last_update_id"]
-            continue
-        if snapshot is None:
+        if not state.synced and snapshot is None:
             state.buffer.append(d)  # reference book_utils.py:24
             continue
-        # snapshot known: drain buffer + current delta through sync
-        pending = [*state.buffer, d]
-        state.buffer = []
-        last_id = snapshot["lastUpdateId"]
+        # synced, or snapshot known: drain buffer + current delta
+        pending, state.buffer = [*state.buffer, d], []
         for p in pending:
             if state.synced:
-                gap = p["first_update_id"] != state.prev_u + 1
-                _emit_delta(out, p, gap)
-                state.prev_u = p["last_update_id"]
-            elif p["last_update_id"] <= last_id:
-                continue  # stale (book_utils.py:34-38)
-            elif p["first_update_id"] <= last_id + 1 <= p["last_update_id"]:
+                gap = p[rule.link_col] != state.prev_u + rule.link_offset
+            else:
+                last_id = snapshot["lastUpdateId"]
+                b = last_id + rule.bridge_offset
+                if p["last_update_id"] < b:
+                    continue  # stale (book_utils.py:34-38)
+                if p["first_update_id"] > b:
+                    # non-bridging post-snapshot delta before sync —
+                    # reference warns and keeps waiting (book_utils.py:46)
+                    continue
                 # bridge found (book_utils.py:40-47): snapshot first,
                 # timestamped 1ms before its local time
                 # (spot_depth_etl.py:114-123)
@@ -110,11 +159,9 @@ def _sync_step(state: SyncState, deltas: list[dict], snapshot: dict | None) -> l
                              snapshot["bids"], True, last_id, False)
                 _emit_levels(out, p["symbol"], local - 1, local, "ask",
                              snapshot["asks"], True, last_id, False)
-                _emit_delta(out, p, False)
-                state.synced = True
-                state.prev_u = p["last_update_id"]
-            # else: non-bridging post-snapshot delta before sync —
-            # reference warns and keeps waiting (book_utils.py:46)
+                state.synced, gap = True, False
+            _emit_delta(out, p, gap)
+            state.prev_u = p["last_update_id"]
     return out
 
 
@@ -122,42 +169,50 @@ def _rows_to_pdf(rows: list[tuple]) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=OUT_COLS)
 
 
-# ---------------------------------------------------------------------------
-# Batch twin: groupBy(symbol).applyInPandas
-# ---------------------------------------------------------------------------
-
-
-DELTA_COLS = [
-    "symbol",
-    "timestamp",
-    "local_timestamp",
-    "first_update_id",
-    "last_update_id",
-    "bids_json",
-    "asks_json",
-    "seq",
-]
-
-
-def _records(pdf: pd.DataFrame) -> list[dict]:
-    """pdf (DELTA_SCHEMA) -> list of plain-builtin dicts. Column-wise
+def _records(pdf: pd.DataFrame, cols: list[str]) -> list[dict]:
+    """pdf (a delta schema) -> list of plain-builtin dicts. Column-wise
     `.tolist()` both converts numpy scalars to JSON-able builtins and
     is ~4x faster than row-wise `to_dict("records")` + per-field
     casts (measured on the 20k-frame bench slab)."""
-    cols = [pdf[c].tolist() for c in DELTA_COLS]
-    return [dict(zip(DELTA_COLS, t)) for t in zip(*cols)]
+    return [dict(zip(cols, t)) for t in zip(*(pdf[c].tolist() for c in cols))]
 
 
-def book_sync_batch(updates, snapshot_for: dict[str, dict]):
-    """`updates` in DELTA_SCHEMA; snapshot_for maps symbol -> snapshot
-    dict (the static side of the reference's stream-static join)."""
+@dataclass(frozen=True)
+class _KeySync:
+    """The per-key body every operator runs: collect the key's deltas,
+    sort by seq, load state, step, save state. The snapshot provider is
+    a pure function symbol -> snapshot|None; replay tests inject fixture
+    snapshots, a live deployment injects the REST fetch
+    (book_utils.py:26-33)."""
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("seq")
-        symbol = pdf["symbol"].iloc[0]
-        state = SyncState()
-        rows = _sync_step(state, _records(pdf), snapshot_for.get(symbol))
-        return _rows_to_pdf(rows)
+    rule: MarketRule
+    snapshot_for: dict[str, dict]
+    available_after_ms: int = 0
+
+    def __call__(self, key, pdfs, load, save) -> list[tuple]:
+        cols = self.rule.delta_cols
+        deltas = [d for pdf in pdfs for d in _records(pdf, cols)]
+        deltas.sort(key=lambda d: d["seq"])
+        snapshot = self.snapshot_for.get(key[0])
+        if snapshot is not None and self.available_after_ms:
+            # simulate late snapshot arrival: buffer until a delta at or
+            # past the availability time shows up
+            if all(d["local_timestamp"] < self.available_after_ms for d in deltas):
+                snapshot = None
+        st = load()
+        rows = _sync_step(st, deltas, snapshot, self.rule)
+        save(st)
+        return rows
+
+
+def book_sync_batch(updates, snapshot_for: dict[str, dict], market: str = "spot"):
+    """`updates` in the market's delta schema; snapshot_for maps symbol
+    -> snapshot dict (the static side of the reference's stream-static
+    join)."""
+    sync = _KeySync(market_rule(market), snapshot_for)
+
+    def run(key, pdf):
+        return _rows_to_pdf(sync(key, [pdf], SyncState, lambda st: None))
 
     return updates.groupBy("symbol").applyInPandas(run, schema=SYNC_OUT_SCHEMA)
 
@@ -165,43 +220,35 @@ def book_sync_batch(updates, snapshot_for: dict[str, dict]):
 # ---------------------------------------------------------------------------
 # Streaming
 #
-# Two implementations of the same state machine:
-# - applyInPandasWithState (used by book_sync_stream): GroupState holds
+# Two operators over the same per-key body:
+# - applyInPandasWithState (book_sync_stream): GroupState holds
 #   (synced, prev_u, buffer_json) — works on any state-store backend.
 # - transformWithStateInPandas (BookSyncProcessor): the Spark 4
 #   successor with typed value/list state. Requires protobuf (the
 #   engine vendors a minimal runtime, session.ensure_protobuf) and a
 #   multi-column-family state store (RocksDB). Equivalence to the
-#   default path is pinned in tests/test_tws_book_sync.py.
+#   default path is pinned in tests/test_tws_book_sync.py (spot) and
+#   tests/test_book_sync_futures.py (futures).
 # ---------------------------------------------------------------------------
 
-from pyspark.sql.streaming.state import GroupStateTimeout
 
-STATE_SCHEMA = "synced BOOLEAN, prev_u BIGINT, buffer_json STRING"
-
-
-def book_sync_stream(updates, snapshot_for: dict[str, dict], available_after_ms: int = 0):
-    """updates: streaming DataFrame in DELTA_SCHEMA, keyed by symbol.
-    State per key: (synced flag, last update id, pre-sync buffer)."""
+def book_sync_stream(updates, snapshot_for: dict[str, dict], available_after_ms: int = 0, market: str = "spot"):
+    """updates: streaming DataFrame in the market's delta schema, keyed
+    by symbol. State per key: (synced flag, last update id, pre-sync
+    buffer)."""
+    sync = _KeySync(market_rule(market), snapshot_for, available_after_ms)
 
     def fn(key, pdf_iter, state):
-        symbol = key[0]
-        deltas: list[dict] = []
-        for pdf in pdf_iter:
-            deltas.extend(_records(pdf))
-        deltas.sort(key=lambda d: d["seq"])
-        st = SyncState()
-        if state.exists:
+        def load() -> SyncState:
+            if not state.exists:
+                return SyncState()
             synced, prev_u, buffer_json = state.get
-            st.synced, st.prev_u = bool(synced), int(prev_u)
-            st.buffer = json.loads(buffer_json)
-        snapshot = snapshot_for.get(symbol)
-        if snapshot is not None and available_after_ms:
-            # simulate late snapshot arrival (exercises buffering)
-            if all(d["local_timestamp"] < available_after_ms for d in deltas):
-                snapshot = None
-        rows = _sync_step(st, deltas, snapshot)
-        state.update((st.synced, st.prev_u, json.dumps(st.buffer)))
+            return SyncState(bool(synced), int(prev_u), json.loads(buffer_json))
+
+        def save(st: SyncState) -> None:
+            state.update((st.synced, st.prev_u, json.dumps(st.buffer)))
+
+        rows = sync(key, pdf_iter, load, save)
         if rows:
             yield _rows_to_pdf(rows)
 
@@ -224,58 +271,34 @@ except ImportError:  # pragma: no cover - only if even the shim fails
 
 
 class BookSyncProcessor(StatefulProcessor):
-    """Keyed by symbol. Value state (synced, prev_u) + list state
-    (pre-sync delta buffer). The snapshot provider is a pure function
-    symbol -> snapshot|None; replay tests inject fixture snapshots,
-    a live deployment injects the REST fetch (book_utils.py:26-33)."""
+    """Keyed by symbol. Value state `sync` (synced, prev_u) + list state
+    `buffer` (pre-sync deltas in the market's delta schema)."""
 
-    def __init__(self, snapshot_for: dict[str, dict], available_after_ms: int = 0):
-        self._snapshot_for = snapshot_for
-        self._available_after_ms = available_after_ms
+    def __init__(self, snapshot_for: dict[str, dict], available_after_ms: int = 0, market: str = "spot"):
+        self._key_sync = _KeySync(market_rule(market), snapshot_for, available_after_ms)
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         self._sync = handle.getValueState("sync", "synced BOOLEAN, prev_u BIGINT")
-        self._buffer = handle.getListState("buffer", DELTA_SCHEMA)
+        self._buffer = handle.getListState("buffer", self._key_sync.rule.delta_schema)
 
     def _load_state(self) -> SyncState:
         st = SyncState()
         if self._sync.exists():
             synced, prev_u = self._sync.get()
             st.synced, st.prev_u = bool(synced), int(prev_u)
-        st.buffer = [
-            dict(zip(
-                ["symbol", "timestamp", "local_timestamp", "first_update_id",
-                 "last_update_id", "bids_json", "asks_json", "seq"], row))
-            for row in self._buffer.get()
-        ]
+        cols = self._key_sync.rule.delta_cols
+        st.buffer = [dict(zip(cols, row)) for row in self._buffer.get()]
         return st
 
     def _save_state(self, st: SyncState) -> None:
         self._sync.update((st.synced, st.prev_u))
         self._buffer.clear()
         if st.buffer:
-            self._buffer.appendList([
-                (d["symbol"], d["timestamp"], d["local_timestamp"],
-                 d["first_update_id"], d["last_update_id"],
-                 d["bids_json"], d["asks_json"], d["seq"])
-                for d in st.buffer
-            ])
+            cols = self._key_sync.rule.delta_cols
+            self._buffer.appendList([tuple(d[c] for c in cols) for d in st.buffer])
 
     def handleInputRows(self, key, rows, timerValues):
-        symbol = key[0]
-        deltas: list[dict] = []
-        for pdf in rows:
-            deltas.extend(_records(pdf))
-        deltas.sort(key=lambda d: d["seq"])
-        snapshot = self._snapshot_for.get(symbol)
-        if snapshot is not None and self._available_after_ms:
-            # simulate late snapshot arrival: buffer until a delta at or
-            # past the availability time shows up
-            if all(d["local_timestamp"] < self._available_after_ms for d in deltas):
-                snapshot = None
-        st = self._load_state()
-        out = _sync_step(st, deltas, snapshot)
-        self._save_state(st)
+        out = self._key_sync(key, rows, self._load_state, self._save_state)
         if out:
             yield _rows_to_pdf(out)
 
@@ -283,10 +306,10 @@ class BookSyncProcessor(StatefulProcessor):
         pass
 
 
-def book_sync_stream_tws(updates, snapshot_for: dict[str, dict], available_after_ms: int = 0):
+def book_sync_stream_tws(updates, snapshot_for: dict[str, dict], available_after_ms: int = 0, market: str = "spot"):
     """transformWithStateInPandas variant (needs protobuf at runtime)."""
     return updates.groupBy("symbol").transformWithStateInPandas(
-        statefulProcessor=BookSyncProcessor(snapshot_for, available_after_ms),
+        statefulProcessor=BookSyncProcessor(snapshot_for, available_after_ms, market),
         outputStructType=SYNC_OUT_SCHEMA,
         outputMode="Append",
         timeMode="None",

@@ -41,18 +41,6 @@ from binance_etl_spark.operators.dedup import (
 )
 
 
-def _swap_write(df: DataFrame, path: str) -> None:
-    """Rename-aside swap, delegated to `sinks._swap_state` so the
-    staging dir uses the one `.__staging_` prefix that
-    `sinks.recover_state` sweeps — a crash during the side-directory
-    write must not leak an orphan dir per attempt (this module
-    previously staged under a `.__swap_` prefix the recovery sweep
-    never matched)."""
-    from binance_etl_spark.streaming.sinks import _swap_state
-
-    _swap_state(df, path)
-
-
 def batch_bands(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, band_no, band_val) LSH bands for a batch of documents."""
     sh = docs.select(id_col, shingles(F.col(text_col)).alias("sh"))
@@ -76,7 +64,7 @@ def foreach_batch_minhash_dedup(
     """
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        from binance_etl_spark.streaming.sinks import recover_state
+        from binance_etl_spark.streaming.sinks import _swap_state, recover_state
 
         recover_state(state_path)
         spark = batch_df.sparkSession
@@ -122,7 +110,9 @@ def foreach_batch_minhash_dedup(
         # Materialize BEFORE the swap: new_state's plan reads the old
         # state directory, which the swap is about to replace.
         new_state = new_state.localCheckpoint(eager=True)
-        _swap_write(new_state, state_path)
+        # rename-aside swap staged under the `.__staging_` prefix that
+        # sinks.recover_state sweeps, so a crashed write leaks no dir
+        _swap_state(new_state, state_path)
         # Output = this batch's docs that are in the accepted state —
         # NOT `keep`: on a replayed batch the docs it accepted last time
         # self-collide (keep is empty), but they ARE in state, so the

@@ -19,10 +19,11 @@ parse but carry an unexpected shape.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from binance_etl_spark.schemas import DECIMAL
+from binance_etl_spark.streaming.book_sync import market_rule
 
 
 def parse_trades(frames: DataFrame) -> DataFrame:
@@ -47,30 +48,32 @@ def parse_trades(frames: DataFrame) -> DataFrame:
     )
 
 
-def parse_depth_updates(frames: DataFrame) -> DataFrame:
-    """frames -> one row per diff-depth update, levels kept as JSON
-    strings (flat schema: required for list-state buffering in the
-    stateful sync operator)."""
+def parse_depth_updates(frames: DataFrame, market: str = "spot") -> DataFrame:
+    """frames -> one row per diff-depth update in the market's delta
+    schema (streaming/book_sync.py `MarketRule`; futures rows also carry
+    `pu`), levels kept as JSON strings (flat schema: required for
+    list-state buffering in the stateful sync operator)."""
     df = frames.select(
         F.try_parse_json("frame").alias("v"), "arrival_ms", "seq"
     )
+
+    def get(path: str, type_: str) -> Column:
+        return F.try_variant_get("v", path, type_)
+
+    fields = {
+        "symbol": get("$.s", "string"),
+        "timestamp": get("$.E", "bigint"),
+        "local_timestamp": F.col("arrival_ms"),
+        "first_update_id": get("$.U", "bigint"),
+        "last_update_id": get("$.u", "bigint"),
+        "prev_final_id": get("$.pu", "bigint"),
+        "bids_json": F.to_json(get("$.b", "array<array<string>>")),
+        "asks_json": F.to_json(get("$.a", "array<array<string>>")),
+        "seq": F.col("seq"),
+    }
     return df.where(
-        F.col("v").isNotNull()
-        & (F.try_variant_get("v", "$.e", "string") == "depthUpdate")
-    ).select(
-        F.try_variant_get("v", "$.s", "string").alias("symbol"),
-        F.try_variant_get("v", "$.E", "bigint").alias("timestamp"),
-        F.col("arrival_ms").alias("local_timestamp"),
-        F.try_variant_get("v", "$.U", "bigint").alias("first_update_id"),
-        F.try_variant_get("v", "$.u", "bigint").alias("last_update_id"),
-        F.to_json(
-            F.try_variant_get("v", "$.b", "array<array<string>>")
-        ).alias("bids_json"),
-        F.to_json(
-            F.try_variant_get("v", "$.a", "array<array<string>>")
-        ).alias("asks_json"),
-        "seq",
-    )
+        F.col("v").isNotNull() & (get("$.e", "string") == "depthUpdate")
+    ).select(*(fields[c].alias(c) for c in market_rule(market).delta_cols))
 
 
 def explode_depth_rows(updates: DataFrame) -> DataFrame:

@@ -31,22 +31,14 @@ def depth_stream(
     market: str = "spot",
 ) -> DataFrame:
     """Depth pipeline for any supported market. ``market`` picks the
-    sync protocol: 'spot' = U==prev_u+1 continuity (book_utils.py:
-    17-51); 'usdm_futures' / 'coinm_futures' = pu-continuity + the
-    futures bridge rule (streaming/book_sync_futures.py — the markets
-    the reference stubs, factory.py:26-29)."""
+    sync rule (streaming/book_sync.py `MarketRule`): spot bridges at
+    lastUpdateId+1 and checks U == prev_u+1 (book_utils.py:17-51);
+    'usdm_futures' / 'coinm_futures' (the markets the reference stubs,
+    factory.py:26-29) bridge at lastUpdateId and check pu == prev_u."""
     raw = stream_replay(spark, replay_path, max_frames)
-    if market == "spot":
-        synced = book_sync_stream(parse_depth_updates(raw), snapshot_for)
-    else:
-        from binance_etl_spark.streaming.book_sync_futures import (
-            book_sync_stream_futures,
-            parse_depth_updates_futures,
-        )
-
-        synced = book_sync_stream_futures(
-            parse_depth_updates_futures(raw), snapshot_for
-        )
+    synced = book_sync_stream(
+        parse_depth_updates(raw, market), snapshot_for, market=market
+    )
     return synced.withColumn("price", F.col("price").cast(DECIMAL)).withColumn(
         "quantity", F.col("quantity").cast(DECIMAL)
     )

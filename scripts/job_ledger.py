@@ -10,6 +10,12 @@ attribute every +1 job to its call site before folding or gating it.
 Usage:
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python scripts/job_ledger.py \
         sink_unique_key_guard sink_snapshot_timetravel
+
+Besides registry names it takes the bench.py legs in `BENCH_LEGS`
+(e.g. book_sync_stream_20k). A streaming leg's micro-batch jobs run
+under the stream's own job group, so a leg's ledger is every job
+submitted while it ran; stream legs' counts follow their micro-batch
+counts, which depend on timing.
 """
 
 from __future__ import annotations
@@ -22,9 +28,24 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench
 from bench import _warmup, materialize
 from binance_etl_spark.plans.registry import REGISTRY, _ensure_loaded
 from binance_etl_spark.session import get_spark
+
+
+# bench.py legs that are not registry entries: each builds its fixture,
+# runs, materializes and returns (seconds, rows, ...).
+BENCH_LEGS = {
+    "book_sync_stream_20k": lambda spark, sf_dir: bench.bench_book_sync(spark),
+    "book_sync_futures_20k": lambda spark, sf_dir: bench.bench_book_sync_futures(spark),
+    "streaming_sustained_quad": bench.bench_streaming_sustained,
+}
+
+
+def _all_jobs(ui: str, app_id: str) -> dict[int, dict]:
+    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/jobs") as r:
+        return {j["jobId"]: j for j in json.load(r)}
 
 
 def main() -> None:
@@ -41,17 +62,22 @@ def main() -> None:
     tracker = spark.sparkContext.statusTracker
 
     for name in names:
-        fn = REGISTRY[name].fn
-        group = f"ledger:{name}"
-        spark.sparkContext.setJobGroup(group, name)
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        n = materialize(df)
-        wall = time.perf_counter() - t0
-        spark.sparkContext.setJobGroup("", "")
-        job_ids = sorted(tracker().getJobIdsForGroup(group))
-        with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/jobs") as r:
-            all_jobs = {j["jobId"]: j for j in json.load(r)}
+        if name in BENCH_LEGS:
+            before = max(_all_jobs(ui, app_id), default=-1)
+            t0 = time.perf_counter()
+            n = BENCH_LEGS[name](spark, sf_dir)[1]
+            wall = time.perf_counter() - t0
+            all_jobs = _all_jobs(ui, app_id)
+            job_ids = sorted(j for j in all_jobs if j > before)
+        else:
+            group = f"ledger:{name}"
+            spark.sparkContext.setJobGroup(group, name)
+            t0 = time.perf_counter()
+            n = materialize(REGISTRY[name].fn(spark, sf_dir))
+            wall = time.perf_counter() - t0
+            spark.sparkContext.setJobGroup("", "")
+            job_ids = sorted(tracker().getJobIdsForGroup(group))
+            all_jobs = _all_jobs(ui, app_id)
         print(f"\n=== {name}: {wall:.3f}s, {len(job_ids)} jobs, {n} rows ===")
         for jid in job_ids:
             j = all_jobs.get(jid, {})

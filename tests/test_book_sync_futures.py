@@ -1,5 +1,5 @@
-"""Futures order-book sync (streaming/book_sync_futures.py): the
-pu-continuity protocol for the two market ids the reference stubs
+"""Futures order-book sync (streaming/book_sync.py, market
+"usdm_futures"): the pu-continuity protocol for the two market ids the reference stubs
 (factory.py:26-29). Scenario beats mirror the spot golden suite:
 stale drop (u < lastUpdateId), bridge (U <= lastUpdateId <= u) with
 snapshot-first emission, pu-gap flagging, post-gap recovery,
@@ -9,11 +9,14 @@ from __future__ import annotations
 
 from binance_etl_spark.sources import fixtures as FX
 from binance_etl_spark.sources.replay import read_replay, stream_replay
-from binance_etl_spark.streaming.book_sync_futures import (
-    book_sync_batch_futures,
-    book_sync_stream_futures,
-    parse_depth_updates_futures,
+from binance_etl_spark.streaming.book_sync import (
+    book_sync_batch,
+    book_sync_stream,
+    book_sync_stream_tws,
 )
+from binance_etl_spark.streaming.parse import parse_depth_updates
+
+MARKET = "usdm_futures"
 
 
 def _norm(rows):
@@ -28,9 +31,9 @@ def _norm(rows):
 
 
 def _batch_rows(spark, fx_paths):
-    updates = parse_depth_updates_futures(read_replay(spark, fx_paths["futures_depth"]))
-    return book_sync_batch_futures(
-        updates, {FX.FUT_SYMBOL: FX.futures_snapshot()}
+    updates = parse_depth_updates(read_replay(spark, fx_paths["futures_depth"]), MARKET)
+    return book_sync_batch(
+        updates, {FX.FUT_SYMBOL: FX.futures_snapshot()}, MARKET
     ).collect()
 
 
@@ -65,10 +68,10 @@ def test_futures_stream_equals_batch(spark, tmp_path):
     fx = FX.write_fixtures(str(tmp_path))
     got_batch = _norm(_batch_rows(spark, fx))
 
-    updates = parse_depth_updates_futures(
-        stream_replay(spark, fx["futures_depth"], 2)  # several micro-batches
+    updates = parse_depth_updates(
+        stream_replay(spark, fx["futures_depth"], 2), MARKET  # several micro-batches
     )
-    sdf = book_sync_stream_futures(updates, {FX.FUT_SYMBOL: FX.futures_snapshot()})
+    sdf = book_sync_stream(updates, {FX.FUT_SYMBOL: FX.futures_snapshot()}, market=MARKET)
     q = (
         sdf.writeStream.format("memory")
         .queryName("mem_fut_sync")
@@ -87,11 +90,12 @@ def test_futures_late_snapshot_buffers(spark, tmp_path):
     fx = FX.write_fixtures(str(tmp_path))
     got_all = _norm(_batch_rows(spark, fx))
 
-    updates = parse_depth_updates_futures(stream_replay(spark, fx["futures_depth"], 2))
-    sdf = book_sync_stream_futures(
+    updates = parse_depth_updates(stream_replay(spark, fx["futures_depth"], 2), MARKET)
+    sdf = book_sync_stream(
         updates,
         {FX.FUT_SYMBOL: FX.futures_snapshot()},
         available_after_ms=FX.T0 + 250,
+        market=MARKET,
     )
     q = (
         sdf.writeStream.format("memory")
@@ -159,9 +163,6 @@ def test_futures_tws_matches_aipws(spark, tmp_path):
 
     if not _protobuf_available():
         _pytest.skip("no protobuf and shim failed")
-    from binance_etl_spark.streaming.book_sync_futures import (
-        book_sync_stream_futures_tws,
-    )
 
     provider_key = "spark.sql.streaming.stateStore.providerClass"
     rocksdb = (
@@ -185,16 +186,18 @@ def test_futures_tws_matches_aipws(spark, tmp_path):
             return _norm(spark.table(name).collect())
 
         got_aip = run(
-            book_sync_stream_futures(
-                parse_depth_updates_futures(stream_replay(spark, fx["futures_depth"], 2)),
+            book_sync_stream(
+                parse_depth_updates(stream_replay(spark, fx["futures_depth"], 2), MARKET),
                 snap,
+                market=MARKET,
             ),
             "mem_fut_aip",
         )
         got_tws = run(
-            book_sync_stream_futures_tws(
-                parse_depth_updates_futures(stream_replay(spark, fx["futures_depth"], 2)),
+            book_sync_stream_tws(
+                parse_depth_updates(stream_replay(spark, fx["futures_depth"], 2), MARKET),
                 snap,
+                market=MARKET,
             ),
             "mem_fut_tws",
         )

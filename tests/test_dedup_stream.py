@@ -142,20 +142,21 @@ def test_stream_dedup_via_writestream(spark, sf_dir):
 
 
 def test_swap_write_stages_under_swept_prefix(spark, tmp_path):
-    """The state swap must stage under the one `.__staging_` prefix
-    `sinks.recover_state` sweeps (ADVICE r5: a crash during the
-    side-directory write previously leaked an unswept `.__swap_*` dir
-    per attempt — unbounded disk growth under repeated failures)."""
+    """The dedup state swap (sinks._swap_state) must stage under the
+    one `.__staging_` prefix `sinks.recover_state` sweeps (ADVICE r5: a
+    crash during the side-directory write previously leaked an unswept
+    `.__swap_*` dir per attempt — unbounded disk growth under repeated
+    failures)."""
     import glob
 
-    from binance_etl_spark.streaming.dedup_stream import _swap_write
+    from binance_etl_spark.streaming.sinks import _swap_state
 
     state = str(tmp_path / "state")
     # a prior crashed attempt's orphan staging dir
     orphan = state + ".__staging_deadbeef"
     os.makedirs(orphan)
-    _swap_write(spark.range(5), state)
-    _swap_write(spark.range(7), state)
+    _swap_state(spark.range(5), state)
+    _swap_state(spark.range(7), state)
     assert spark.read.parquet(state).count() == 7
     # no leaked siblings: the orphan was swept, no .__swap_* ever made
     leftovers = [

@@ -19,8 +19,9 @@ def test_parse_event_id():
     )
     # the reference STUBS these exact market ids (factory.py:26-29
     # falls through to a raise); the engine implements them — the
-    # futures depth path runs the pu-continuity sync protocol
-    # (streaming/book_sync_futures.py, tests/test_book_sync_futures.py)
+    # futures depth path runs the futures rule of the one book-sync
+    # state machine (streaming/book_sync.py,
+    # tests/test_book_sync_futures.py)
     fut = parse_event_id("binance.usdm_futures.btcusdt.trade")
     assert fut.market == "usdm_futures"
     assert parse_event_id("binance.coinm_futures.btcusd_perp.depth").market == (
